@@ -56,6 +56,18 @@ def loop_checkpoint(df: DataFrame, reliable: bool = False) -> DataFrame:
     return df.localCheckpoint()
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``/``checkpoint`` result
+    now. ``DataFrame.unpersist`` only drops cache-manager entries: the
+    checkpointed rows live in the persisted RDD under the frame's
+    ``LogicalRDD`` leaf, which stays in ``getPersistentRDDs`` after the
+    call. Unpersisting that RDD releases it. ``df`` must not be read again afterwards; a frame
+    that is not a checkpoint result is left alone."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def disk_materialize(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
     """EDGE-SCALE loop truncation: eager ``localCheckpoint`` at
     ``DISK_ONLY`` (a Spark 4 capability), freeing ``prev`` (the

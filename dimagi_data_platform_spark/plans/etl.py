@@ -58,7 +58,11 @@ history, not the corpus —
     event rescan (churned is monotone: the horizon only advances).
 
 The versioned MERGE + JDBC MERGE then update only those grains. The
-staging merge is the standard key-shuffled copy-on-write cost.
+staging merge is the standard key-shuffled copy-on-write cost. Below
+the row work sits a fixed per-batch job floor (about 50 Spark jobs:
+one write job per versioned commit, plus the eager checkpoints, the
+touched-grain joins and the publish); versioned commits add no
+read-back count or schema-inference jobs to it.
 
 Resubmission contract (matches the reference's form-resubmission
 semantics): a resubmitted event (same event_id, later ts) may change
@@ -70,6 +74,7 @@ abandoned grain stale until its next organic touch.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,6 +82,7 @@ from pyspark.sql import functions as F
 
 from dimagi_data_platform_spark.functions.num import dsum
 from dimagi_data_platform_spark.operators.dedup import latest_by_key
+from dimagi_data_platform_spark.operators.loop import release_checkpoint
 from dimagi_data_platform_spark.operators.sessionize import sessionize
 from dimagi_data_platform_spark.sources.incremental import (
     WatermarkStore,
@@ -347,15 +353,40 @@ def _process_batch(
     spark: SparkSession, cfg: PlatformEtlConfig, batch: DataFrame
 ) -> dict:
     """The shared convergent per-batch chain (batch driver and the
-    streaming twin's foreachBatch both land here). The watermark
-    advances to max(stored, batch max) so an out-of-order micro-batch
-    (a late-listed archive file) never walks the horizon backwards."""
+    streaming twin's foreachBatch both land here). Every frame the
+    chain pins with ``localCheckpoint`` is released when the batch
+    returns or raises, so a long-lived scheduler or stream holds no
+    checkpoint blocks between batches."""
+    pinned: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint()
+        pinned.append(df)
+        return df
+
+    try:
+        return _run_batch(spark, cfg, batch, pin)
+    finally:
+        for df in pinned:
+            release_checkpoint(df)
+
+
+def _run_batch(
+    spark: SparkSession,
+    cfg: PlatformEtlConfig,
+    batch: DataFrame,
+    pin: Callable[[DataFrame], DataFrame],
+) -> dict:
+    """The chain itself; ``pin`` checkpoints a frame for the batch's
+    lifetime. The watermark advances to max(stored, batch max) so an
+    out-of-order micro-batch (a late-listed archive file) never walks
+    the horizon backwards."""
     store = WatermarkStore(f"{cfg.warehouse}/watermark.json")
     wm_before = store.get(cfg.watermark_name)
     # the batch drives several stages — pin it once, then ONE driver
     # action for count + watermark + commit stamp (three separate
     # collects were three jobs of the per-batch floor)
-    batch = batch.localCheckpoint()
+    batch = pin(batch)
     stats = batch.agg(
         F.count(F.lit(1)).alias("n"),
         F.max(F.unix_micros(F.col("ts"))).alias("wm"),
@@ -406,18 +437,17 @@ def _process_batch(
         staged = spark.read.parquet(staging_path).drop("event_date")
     else:
         staged = read_version(spark, staging_path)
-    scoped = staged.join(F.broadcast(users), "user_id", "semi").localCheckpoint()
+    scoped = pin(staged.join(F.broadcast(users), "user_id", "semi"))
     wm_stamp = F.lit(int(new_wm)).cast("long").alias("_etl_wm")
     updates: dict[str, DataFrame] = {}
 
     def _apply(name: str, rows: DataFrame) -> None:
         rows = rows.withColumn("_etl_wm", wm_stamp)
-        # pin only what the publish stage will re-read — merge_version
-        # materializes its own result, so an extra checkpoint per
-        # indicator is one wasted eager job each (measured ~0.5-1.5 s
-        # of the per-batch floor at sf1)
+        # pin only what the publish stage will re-read — an extra
+        # checkpoint per indicator is one wasted eager job each
+        # (measured ~0.5-1.5 s of the per-batch floor at sf1)
         if cfg.jdbc_url and name in cfg.publish:
-            rows = rows.localCheckpoint()
+            rows = pin(rows)
         updates[name] = rows
         iv = _merge_or_init(
             spark,

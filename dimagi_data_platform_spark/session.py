@@ -9,6 +9,12 @@ Design notes (100 TB posture):
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive timestamps) byte-for-byte.
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
+- Codegen class cache sized to the ETL's class working set: one
+  ``run_platform_etl`` batch generates ~223 distinct whole-stage
+  classes in the same cyclic order every batch, so Spark's default
+  100-entry LRU missed on every one of them in every batch (Janino and
+  then the JIT paid again each time). At 1000 entries a steady batch
+  compiles only the stages whose inlined literals change per batch.
 """
 
 from __future__ import annotations
@@ -61,6 +67,7 @@ def get_spark(app_name: str = "dimagi-data-platform-spark") -> SparkSession:
         # pruning works on ts sort keys) and standard across engines
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         # Commit and fault in the whole heap at JVM start: on
         # memory-overcommitted hosts (e.g. microVM guests), first-touch

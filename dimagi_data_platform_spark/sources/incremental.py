@@ -24,6 +24,8 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dimagi_data_platform_spark.operators.loop import release_checkpoint
+
 
 class WatermarkStore:
     """Tiny JSON key→value checkpoint file with atomic replace."""
@@ -118,3 +120,4 @@ def upsert_partitioned(
         .localCheckpoint()
     )
     latest.write.partitionBy(partition_col).mode("overwrite").parquet(path)
+    release_checkpoint(latest)

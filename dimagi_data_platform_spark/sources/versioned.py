@@ -36,6 +36,17 @@ number. The winner renames its staged directory to ``v=<n>`` for a
 human-readable layout; a crash between commit and rename is benign —
 readers fall back to the staged path recorded in the entry.
 
+**Commit entries carry what a reader needs without touching the data.**
+``n_rows`` comes from a ``pyspark.sql.Observation`` on the staging
+write itself, so a commit costs only the write job (no read-back
+count). ``schema`` is the written schema as parquet reads it back
+(every field nullable, ``StructType.json()``); ``read_version`` passes
+it to ``spark.read.schema`` and so skips the footer-inference job a
+bare ``spark.read.parquet`` fires on every read. A DV commit records
+the ``delta/`` rows' schema as ``schema`` and the ``dv/`` keys' as
+``dv_schema``. Entries written before these fields existed have no
+``schema`` and read through inference, unchanged.
+
 ``_manifest.json`` survives as a DERIVED read cache (legacy layout,
 rewritten best-effort after each commit); ``history()`` always unions
 it with the commit log, log entries winning, so a stale cache can
@@ -56,8 +67,9 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 COMMIT_DIR = "_commits"
@@ -151,15 +163,37 @@ def _data_dir(path: str, entry: dict) -> str:
     return os.path.join(path, f"v={entry['version']}")
 
 
-def _stage_write(df: DataFrame, path: str) -> tuple[str, int]:
-    """Write df's parquet into a unique staged directory nobody else
-    can be writing to; returns (staged dir name, row count)."""
+def _new_stage(path: str) -> str:
+    """A unique staged directory name nobody else can be writing to."""
     os.makedirs(path, exist_ok=True)
-    stage = f"{STAGE_PREFIX}{uuid.uuid4().hex}"
-    sdir = os.path.join(path, stage)
-    df.write.mode("overwrite").parquet(sdir)
-    n_rows = df.sparkSession.read.parquet(sdir).count()
-    return stage, n_rows
+    return f"{STAGE_PREFIX}{uuid.uuid4().hex}"
+
+
+def _write_observed(df: DataFrame, out: str) -> tuple[int, str]:
+    """Write df's parquet to ``out`` in ONE job; returns (row count,
+    schema JSON as parquet reads it back). The count is observed on the
+    write itself (the metrics arrive with the job's completion, also for
+    an empty or 0-partition frame); file sources read every field as
+    nullable, so the recorded schema is ``asNullable``."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(out)
+    return int(obs.get["n"]), df._jdf.schema().asNullable().json()
+
+
+def _stage_write(df: DataFrame, path: str) -> tuple[str, int, str]:
+    """Write df into a fresh staged directory; returns (staged dir
+    name, row count, schema JSON)."""
+    stage = _new_stage(path)
+    n_rows, schema = _write_observed(df, os.path.join(path, stage))
+    return stage, n_rows, schema
+
+
+def _read_parquet(spark: SparkSession, d: str, schema: str | None) -> DataFrame:
+    """Scan one data directory with its recorded schema (no inference
+    job); entries that predate the ``schema`` field infer it."""
+    if schema is None:
+        return spark.read.parquet(d)
+    return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(d)
 
 
 def _promote(path: str, stage: str, version: int) -> None:
@@ -183,6 +217,7 @@ def _commit_staged(
     path: str,
     stage: str,
     n_rows: int,
+    schema: str,
     commit_ts: str,
     extra: dict | None,
     expect_version: int | None = None,
@@ -208,6 +243,7 @@ def _commit_staged(
         "commit_ts": commit_ts,
         "n_rows": n_rows,
         "dir": stage,
+        "schema": schema,
     }
     if extra:
         entry.update(extra)
@@ -235,10 +271,10 @@ def write_version(
     committed" and "batch id recorded" are one atomic link — there is
     no crash window where the state exists but the replay marker
     doesn't)."""
-    stage, n_rows = _stage_write(df, path)
+    stage, n_rows, schema = _stage_write(df, path)
     while True:
         try:
-            return _commit_staged(path, stage, n_rows, commit_ts, extra)
+            return _commit_staged(path, stage, n_rows, schema, commit_ts, extra)
         except CommitConflictError:
             continue  # blind snapshot: retry at the next number
 
@@ -270,12 +306,12 @@ def _resolve_snapshot(
                 "table state)"
             )
         e = by_n[base_n]
-    out = spark.read.parquet(_data_dir(path, e))
+    out = _read_parquet(spark, _data_dir(path, e), e.get("schema"))
     for link in reversed(chain):
         d = _data_dir(path, link)
         keys = link["keys"]
-        dv = spark.read.parquet(os.path.join(d, "dv"))
-        delta = spark.read.parquet(os.path.join(d, "delta"))
+        dv = _read_parquet(spark, os.path.join(d, "dv"), link.get("dv_schema"))
+        delta = _read_parquet(spark, os.path.join(d, "delta"), link.get("schema"))
         kept = out.join(dv, keys, "left_anti")
         out = _null_fill_missing(kept, delta).unionByName(
             _null_fill_missing(delta, kept)
@@ -379,12 +415,14 @@ def merge_version(
             tagged.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__src")
-            .localCheckpoint()  # materialize before writing over our read
         )
-        stage, n_rows = _stage_write(merged, path)
+        # no materialization needed before the write: it lands in a
+        # fresh staged directory while the base version it reads stays
+        # immutable (OCC never writes over a committed version)
+        stage, n_rows, schema = _stage_write(merged, path)
         try:
             return _commit_staged(
-                path, stage, n_rows, commit_ts, extra,
+                path, stage, n_rows, schema, commit_ts, extra,
                 expect_version=base_n + 1,
             )
         except CommitConflictError:
@@ -533,13 +571,12 @@ def merge_version_dv(
             )
             .select(*keys)
         )
-        os.makedirs(path, exist_ok=True)
-        stage = f"{STAGE_PREFIX}{uuid.uuid4().hex}"
+        stage = _new_stage(path)
         sdir = os.path.join(path, stage)
-        winners.write.mode("overwrite").parquet(os.path.join(sdir, "delta"))
-        dv.write.mode("overwrite").parquet(os.path.join(sdir, "dv"))
-        n_delta = spark.read.parquet(os.path.join(sdir, "delta")).count()
-        n_dv = spark.read.parquet(os.path.join(sdir, "dv")).count()
+        n_delta, delta_schema = _write_observed(
+            winners, os.path.join(sdir, "delta")
+        )
+        n_dv, dv_schema = _write_observed(dv, os.path.join(sdir, "dv"))
         # unique-key invariant (verified above): each tombstone kills
         # exactly one base row
         n_rows = base_entry["n_rows"] - n_dv + n_delta
@@ -552,12 +589,13 @@ def merge_version_dv(
             "n_delta": n_delta,
             "keys_unique": True,
             "dv_depth": depth,
+            "dv_schema": dv_schema,
         }
         if extra:
             entry_extra.update(extra)
         try:
             n = _commit_staged(
-                path, stage, n_rows, commit_ts, entry_extra,
+                path, stage, n_rows, delta_schema, commit_ts, entry_extra,
                 expect_version=base_n + 1,
             )
         except CommitConflictError:
@@ -590,10 +628,10 @@ def compact_version(
     while True:
         base_n = history(path)[-1]["version"]
         snap = read_version(spark, path, base_n).coalesce(target_files)
-        stage, n_rows = _stage_write(snap, path)
+        stage, n_rows, schema = _stage_write(snap, path)
         try:
             return _commit_staged(
-                path, stage, n_rows, commit_ts, {"compaction": True},
+                path, stage, n_rows, schema, commit_ts, {"compaction": True},
                 expect_version=base_n + 1,
             )
         except CommitConflictError:

@@ -118,17 +118,22 @@ def test_platform_etl_crash_convergence(spark, tmp_path):
             fail_after=fail_after,
         )
 
+    # a crashed batch still releases the checkpoints it pinned
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    n_persisted = persisted().size()
     with pytest.raises(RuntimeError, match="injected crash"):
         run_platform_etl(spark, mkcfg2("stage_merge"))
     # watermark must NOT have advanced → resume reprocesses the batch
     with pytest.raises(RuntimeError, match="injected crash"):
         run_platform_etl(spark, mkcfg2("indicators"))
+    assert persisted().size() <= n_persisted
     ok1 = run_platform_etl(spark, mkcfg2())
     assert ok1["rows_ingested"] > 0 and "watermark_after" in ok1
 
     ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(src2)
     with pytest.raises(RuntimeError, match="injected crash"):
         run_platform_etl(spark, mkcfg2("publish"))
+    assert persisted().size() <= n_persisted
     ok2 = run_platform_etl(spark, mkcfg2())
     assert ok2["rows_ingested"] > 0
 
@@ -443,3 +448,58 @@ def test_platform_etl_stream_crash_resume(spark, tmp_path):
         ) == sorted(
             map(tuple, want.select(*cols).collect()), key=repr
         ), name
+
+
+#: Spark jobs one steady incremental batch may fire (jdbc off; 49 on
+#: this data). A versioned commit is one write job plus its AQE shuffle
+#: stages; read-back counts, footer-inference reads or pre-write
+#: checkpoints per commit would take the batch to ~95.
+_BATCH_JOB_BOUND = 55
+#: whole-stage classes a steady batch may compile. Only stages with
+#: batch-varying inlined literals (the _etl_wm stamp, the churn horizon,
+#: the watermark filter) recompile (26 on this data); a codegen cache
+#: smaller than the batch's class working set recompiles all ~210.
+_BATCH_COMPILE_BOUND = 60
+
+
+def test_platform_etl_batch_fixed_cost(spark, tmp_path):
+    """A steady batch stays under the job and codegen-compile bounds,
+    and every batch releases the checkpoints it pinned: the
+    persistent-RDD count never grows (the crash path is checked in the
+    crash-convergence test)."""
+    from dimagi_data_platform_spark.catalog import load_table
+
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    ev = load_table(spark, SF, "events")
+    q1, q2 = ev.agg(
+        F.expr("percentile(unix_micros(ts), array(0.6, 0.8))").cast("array<long>")
+    ).collect()[0][0]
+    src = str(tmp_path / "events_src")
+    us = F.unix_micros("ts")
+    ev.filter(us <= q1).write.parquet(src)
+    cfg = PlatformEtlConfig(
+        source_events=src, warehouse=str(tmp_path / "wh"), jdbc_url=None
+    )
+    persisted = jsc.getPersistentRDDs().size()
+    run_platform_etl(spark, cfg)
+    assert jsc.getPersistentRDDs().size() <= persisted
+
+    ev.filter((us > q1) & (us <= q2)).write.mode("append").parquet(src)
+    assert run_platform_etl(spark, cfg)["rows_ingested"] > 0
+    assert jsc.getPersistentRDDs().size() <= persisted
+
+    ev.filter(us > q2).write.mode("append").parquet(src)
+    c0 = compiles.METRIC_COMPILATION_TIME().getCount()
+    sc.setJobGroup("etl-fixed-cost", "steady batch")
+    try:
+        assert run_platform_etl(spark, cfg)["rows_ingested"] > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_compiles = compiles.METRIC_COMPILATION_TIME().getCount() - c0
+    jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("etl-fixed-cost"))
+    assert jsc.getPersistentRDDs().size() <= persisted
+    assert n_compiles < _BATCH_COMPILE_BOUND, n_compiles
+    assert n_jobs <= _BATCH_JOB_BOUND, n_jobs

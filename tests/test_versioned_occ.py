@@ -230,3 +230,120 @@ def test_n_writer_hammer_interleaved_cow_dv_vacuum(spark, tmp_path):
             want[t * 5 + j] = (n_merges, f"w{t}m{n_merges}")
     assert got == want
     assert hist[-1]["n_rows"] == len(got) == 20
+
+
+def _jobs_fired(spark, fn) -> int:
+    """Spark jobs ``fn()`` fires, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("versioned-probe", "jobs fired")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup("versioned-probe"))
+
+
+def test_recorded_schema_skips_inference_and_matches_it(spark, tmp_path):
+    """Commit entries record the schema parquet reads back, nullability
+    included, for copy-on-write and DV commits alike; read_version then
+    builds its plan without firing a Spark job."""
+    import json
+
+    from pyspark.sql.types import (
+        ArrayType,
+        LongType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    # non-nullable at every nesting level; file reads make all nullable
+    not_null = StructType([
+        StructField("id", LongType(), False),
+        StructField("ver", LongType(), False),
+        StructField("tags", ArrayType(StringType(), False), False),
+        StructField("attrs", MapType(StringType(), LongType(), False), False),
+        StructField("pt", StructType([StructField("x", LongType(), False)]), False),
+    ])
+    p = str(tmp_path / "tbl")
+    rows = [(1, 1, ["a"], {"k": 1}, (1,)), (2, 1, [], {}, (2,))]
+    V.write_version(_mk(spark, rows, not_null), p, "2024-01-01")
+    # merges compare nested types exactly, so updates carry the
+    # nullable nested types the table reads back with
+    upd = (
+        "id long not null, ver long not null, tags array<string>, "
+        "attrs map<string, long>, pt struct<x: long>"
+    )
+    V.merge_version(
+        spark, p, _mk(spark, [(2, 2, ["b"], {}, (3,))], upd), ["id"], "ver",
+        "2024-01-02",
+    )
+    V.merge_version_dv(
+        spark, p, _mk(spark, [(3, 1, [], {"z": 0}, (4,))], upd), ["id"],
+        "ver", "2024-01-03",
+    )
+    parsed = lambda s: StructType.fromJson(json.loads(s))  # noqa: E731
+    for e in V.history(p):
+        d = V._data_dir(p, e)
+        if e.get("dv"):
+            for sub, field in (("delta", "schema"), ("dv", "dv_schema")):
+                inferred = spark.read.parquet(os.path.join(d, sub)).schema
+                assert parsed(e[field]) == inferred, (e["version"], sub)
+        else:
+            assert parsed(e["schema"]) == spark.read.parquet(d).schema
+    for v in (1, 2, 3):
+        assert _jobs_fired(spark, lambda: V.read_version(spark, p, v)) == 0
+    got = {r.id: r.ver for r in V.read_version(spark, p).collect()}
+    assert got == {1: 1, 2: 2, 3: 1}
+
+
+def test_legacy_entry_without_schema_still_reads(spark, tmp_path):
+    """A table written before entries carried ``schema`` (here the
+    manifest-only legacy layout) reads through inference, and a merge
+    on top of it commits a schema-bearing entry."""
+    import json
+
+    p = str(tmp_path / "legacy")
+    _mk(spark, [(1, 1), (2, 1)], "id long, ver long").write.parquet(
+        os.path.join(p, "v=1")
+    )
+    with open(os.path.join(p, V.MANIFEST), "w") as f:
+        json.dump({"versions": [
+            {"version": 1, "commit_ts": "2024-01-01", "n_rows": 2}
+        ]}, f)
+    assert _jobs_fired(spark, lambda: V.read_version(spark, p)) >= 1
+    assert sorted(map(tuple, V.read_version(spark, p).collect())) == [(1, 1), (2, 1)]
+    V.merge_version(
+        spark, p, _mk(spark, [(2, 2)], "id long, ver long"), ["id"], "ver",
+        "2024-01-02",
+    )
+    assert "schema" in V.history(p)[-1]
+    assert sorted(map(tuple, V.read_version(spark, p).collect())) == [(1, 1), (2, 2)]
+
+
+def test_write_version_of_empty_frames_records_zero_rows(spark, tmp_path):
+    """The observed row count arrives for an empty frame and for a
+    0-partition frame; the write never waits on it forever."""
+    import threading
+
+    frames = {
+        "empty": _mk(spark, [], "id long, ver long"),
+        "no_partitions": spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), "id long, ver long"
+        ),
+    }
+    for name, df in frames.items():
+        p = str(tmp_path / name)
+        done = []
+        t = threading.Thread(
+            target=lambda: done.append(V.write_version(df, p, "2024-01-01")),
+            daemon=True,
+        )
+        t.start()
+        t.join(120)
+        assert done == [1], f"{name}: write_version did not return"
+        assert V.history(p)[-1]["n_rows"] == 0
+        got = V.read_version(spark, p)
+        assert got.columns == ["id", "ver"] and got.count() == 0
