@@ -17,10 +17,7 @@ Spark-first shape (mirrors operators/graph.pagerank):
 - pair counting is a row-local array explode + a groupBy bounded by
   |symbol-vocabulary|² keys (map-side partial sums);
 - the argmax pair is a 1-row ``ORDER BY … LIMIT 1`` broadcast
-  cross-joined onto the vocabulary — NO driver collect anywhere: the
-  whole N-merge train is a lazy DataFrame program, checkpointed per
-  round to truncate lineage (the same loop contract as PageRank and
-  connected components);
+  cross-joined onto the vocabulary — NO driver collect anywhere;
 - determinism: counts are exact integers; ties break on the pair
   itself, so the merge table is bitwise reproducible — the DuckDB
   oracle unrolls the identical recurrence as chained CTEs and the
@@ -30,6 +27,14 @@ Scale: every round touches the word-frequency table (vocabulary-sized,
 NOT corpus-sized — the one corpus-keyed shuffle is the initial word
 count), so 100 TB of text trains at the cost of |vocab| string ops per
 merge plus an |symbols|²-key aggregate.
+
+Loop contract (operators/loop.py): one merge loop serves both
+:func:`bpe_train` and :func:`bpe_train_apply`. Each round checkpoints
+its 1-row argmax and the re-segmented vocabulary with
+``loop_checkpoint``, releasing the vocabulary it replaces; at the end
+each entry point releases what its result does not read, so the merge
+table keeps one checkpoint per merge and the re-segmented vocabulary
+keeps one in all.
 """
 
 from __future__ import annotations
@@ -37,7 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dimagi_data_platform_spark.operators.loop import loop_checkpoint
+from dimagi_data_platform_spark.operators.loop import (
+    loop_checkpoint,
+    release_checkpoint,
+)
 
 SEP = "  "  # double-space symbol separator (symbols never contain spaces)
 
@@ -90,6 +98,31 @@ def apply_merge(segmented: DataFrame, best: DataFrame) -> DataFrame:
     )
 
 
+def _merge_loop(
+    wordfreq: DataFrame,
+    n_merges: int,
+    word_col: str,
+    freq_col: str,
+    reliable: bool,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The one BPE merge loop: returns the re-segmented vocabulary
+    (seg, freq) and the checkpointed 1-row argmax of each round."""
+    cur = loop_checkpoint(segment_words(wordfreq, word_col, freq_col), reliable)
+    bests: list[DataFrame] = []
+    for _ in range(n_merges):
+        pc = (
+            adjacent_pairs(cur)
+            .groupBy("a", "b")
+            .agg(F.sum("freq").cast("long").alias("pair_count"))
+        )
+        best = loop_checkpoint(
+            pc.orderBy(F.desc("pair_count"), "a", "b").limit(1), reliable
+        )
+        bests.append(best)
+        cur = loop_checkpoint(apply_merge(cur, best), reliable, prev=cur)
+    return cur, bests
+
+
 def bpe_train(
     wordfreq: DataFrame,
     n_merges: int,
@@ -104,28 +137,18 @@ def bpe_train(
     to contain at least one multi-symbol word per round (true for any
     real corpus and n_merges << total pair mass).
     """
-    ck = lambda df: loop_checkpoint(df, reliable)  # noqa: E731
-    cur = ck(segment_words(wordfreq, word_col, freq_col))
-    merge_rows: list[DataFrame] = []
-    for step in range(1, n_merges + 1):
-        pc = (
-            adjacent_pairs(cur)
-            .groupBy("a", "b")
-            .agg(F.sum("freq").cast("long").alias("pair_count"))
+    cur, bests = _merge_loop(wordfreq, n_merges, word_col, freq_col, reliable)
+    release_checkpoint(cur)
+    merge_rows = [
+        best.select(
+            F.lit(step).cast("long").alias("step"),
+            "a",
+            "b",
+            F.concat("a", "b").alias("merged"),
+            "pair_count",
         )
-        best = ck(
-            pc.orderBy(F.desc("pair_count"), "a", "b").limit(1)
-        )
-        merge_rows.append(
-            best.select(
-                F.lit(step).cast("long").alias("step"),
-                "a",
-                "b",
-                F.concat("a", "b").alias("merged"),
-                "pair_count",
-            )
-        )
-        cur = ck(apply_merge(cur, best))
+        for step, best in enumerate(bests, start=1)
+    ]
     out = merge_rows[0]
     for m in merge_rows[1:]:
         out = out.unionAll(m)
@@ -143,16 +166,9 @@ def bpe_train_apply(
     vocabulary (seg, freq) under the learned merges — train + encode
     as one lazy program (the merge argmaxes stay broadcast 1-row
     limits, never driver literals)."""
-    ck = lambda df: loop_checkpoint(df, reliable)  # noqa: E731
-    cur = ck(segment_words(wordfreq, word_col, freq_col))
-    for _ in range(n_merges):
-        pc = (
-            adjacent_pairs(cur)
-            .groupBy("a", "b")
-            .agg(F.sum("freq").cast("long").alias("pair_count"))
-        )
-        best = ck(pc.orderBy(F.desc("pair_count"), "a", "b").limit(1))
-        cur = ck(apply_merge(cur, best))
+    cur, bests = _merge_loop(wordfreq, n_merges, word_col, freq_col, reliable)
+    for best in bests:
+        release_checkpoint(best)
     return cur
 
 

@@ -11,16 +11,19 @@ vertex takes the min of its own label and its neighbors' labels; the
 loop stops when the global label sum stops decreasing (labels are
 monotone non-increasing, so the sum is a convergence certificate that
 costs one scalar aggregate per round — no row-level diff join).
-
-Scale: every round is one shuffle (join on vertex id) + one partial
-aggregate; lineage is truncated per round with localCheckpoint so the
-plan doesn't grow with iterations. Rounds needed = graph diameter,
-which for near-dup clusters is small (dup groups are near-cliques).
 For adversarial long-chain graphs pass ``algorithm="star"``: the
 two-phase large-star/small-star contraction (Kiveris et al.,
 "Connected Components in MapReduce and Beyond") converges in O(log n)
-rounds with the same per-round shape; diameter-bound propagation stays
-the default because dedup graphs are near-cliques.
+rounds; diameter-bound propagation stays the default because dedup
+graphs are near-cliques.
+
+Loop contract (operators/loop.py): propagation keeps the symmetric
+edge set in a ``cached_edges`` block partitioned on ``nbr``, so each
+round's label lookup reads the cached clustering through the
+``guarded_broadcast`` label frontier and only the groupBy(id) shuffles.
+Both algorithms truncate lineage every round with ``loop_checkpoint``
+and release the round they supersede; a loop that hits ``max_iter``
+without converging releases everything before it raises.
 """
 
 from __future__ import annotations
@@ -28,12 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dimagi_data_platform_spark.operators.loop import loop_checkpoint
-
-# vertex-sized label frontiers are broadcast into the per-round edge
-# join below this row count (the pagerank/HITS guard, guide §3.1);
-# above it the round falls back to a shuffle join.
-_BROADCAST_MAX_LABELS = 4_000_000
+from dimagi_data_platform_spark.operators.loop import (
+    cached_edges,
+    guarded_broadcast,
+    loop_checkpoint,
+    release_checkpoint,
+)
 
 
 def connected_components(
@@ -66,100 +69,76 @@ def connected_components(
         return labels
     if algorithm != "propagate":
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    ck = lambda df: loop_checkpoint(df, reliable)  # noqa: E731
-    # Materialize the (possibly expensive) upstream edge plan ONCE —
-    # every round joins sym, and without truncation the similarity-pair
-    # computation that produced the edges would re-execute per round.
-    # Checkpoint BEFORE the symmetric union: union's two branches are
-    # separate plan subtrees, so uniting the raw edge plan with itself
-    # would execute the upstream similarity computation twice.
-    one_way = ck(
-        edges.select(F.col(src_col).alias("id"), F.col(dst_col).alias("nbr"))
-    )
-    # r15 (guide §2.4, the r14 pagerank layout): the symmetric edge set
-    # is persisted hash-repartitioned on ``nbr`` WITH lineage (cheap to
-    # rebuild from the checkpointed one_way), so each round's
-    # label-lookup join on nbr reads the cached clustering with no
-    # Exchange when the vertex-sized label frontier is broadcast — the
-    # per-round edge-stream shuffles drop from two (join + groupBy) to
-    # the one the groupBy(id) fundamentally needs. Released before
-    # returning (the final labels are checkpointed).
-    sym = (
-        one_way.union(
-            one_way.select(F.col("nbr").alias("id"), F.col("id").alias("nbr"))
+    ck = lambda df, prev=None: loop_checkpoint(df, reliable, prev)  # noqa: E731
+    # both orientations from ONE pass over the upstream edge plan (a
+    # union of two projections would run the similarity computation
+    # that produced the edges twice), computed once into the cache
+    both = F.explode(
+        F.array(
+            F.struct(F.col(src_col).alias("id"), F.col(dst_col).alias("nbr")),
+            F.struct(F.col(dst_col).alias("id"), F.col(src_col).alias("nbr")),
         )
-        .repartition("nbr")
-        .persist()
     )
-
-    # Only edge-incident vertices can ever change label; iterate over
-    # that (usually far smaller) subgraph and union the untouched
-    # singletons back at the end as a zero-shuffle projection. At scale
-    # this bounds every round by the near-dup population, not the
-    # corpus.
+    sym = edges.select(both.alias("e")).select("e.id", "e.nbr")
     base = vertices.select(F.col(id_col).alias("id"))
-    # vertex-sized, materialized once: it feeds BOTH the active-set
-    # semi-join and the singleton anti-join (the latter evaluates at
-    # action time, after the edge cache is released below)
-    edge_ids = ck(sym.select("id").distinct())
-    labels = (
-        base.join(edge_ids, "id", "left_semi")
-        .select("id", F.col("id").alias("component"))
-        .transform(ck)
-    )
+    with cached_edges(sym, "nbr") as sym:
+        # Only edge-incident vertices can ever change label; iterate
+        # over that (usually far smaller) subgraph and union the
+        # untouched singletons back at the end. edge_ids is vertex-
+        # sized and read by both the active set and the singletons.
+        edge_ids = ck(sym.select("id").distinct())
+        labels = ck(
+            base.join(edge_ids, "id", "left_semi").select(
+                "id", F.col("id").alias("component")
+            )
+        )
+        n_active, prev_sum = labels.agg(
+            F.count(F.lit(1)), F.sum("component")
+        ).collect()[0]
+        for _ in range(max_iter):
+            nbr_labels = (
+                sym.join(
+                    guarded_broadcast(
+                        labels.select(
+                            F.col("id").alias("nbr"),
+                            F.col("component").alias("nbr_comp"),
+                        ),
+                        n_active,
+                    ),
+                    "nbr",
+                )
+                .groupBy("id")
+                .agg(F.min("nbr_comp").alias("min_nbr"))
+            )
+            labels = ck(
+                labels.join(nbr_labels, "id", "left").select(
+                    "id",
+                    F.least(
+                        F.col("component"), F.coalesce("min_nbr", "component")
+                    ).alias("component"),
+                ),
+                labels,
+            )
+            cur_sum = labels.agg(F.sum("component")).collect()[0][0]
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
+        else:
+            # Still shrinking at the round cap -> the labels are NOT
+            # components yet (long-diameter graph). Returning them
+            # would be silently wrong — linkage chains hit exactly this
+            # (a sorted neighborhood is a path graph). Fail loudly and
+            # point at the O(log n) algorithm.
+            release_checkpoint(labels)
+            release_checkpoint(edge_ids)
+            raise RuntimeError(
+                f"min-label propagation did not converge in {max_iter} rounds; "
+                "the graph's diameter exceeds the cap — use "
+                "algorithm='star' (O(log n) rounds) or raise max_iter"
+            )
     singletons = base.join(edge_ids, "id", "left_anti").select(
         "id", F.col("id").alias("component")
     )
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-
-    # the label frontier is vertex-sized; broadcast it into the edge
-    # join while provably small (the checkpointed frontier has no
-    # stats, so Catalyst alone would shuffle the cached edges), with a
-    # shuffle fallback past the guard (guide §3.1)
-    n_active = labels.count()
-    bc = F.broadcast if n_active <= _BROADCAST_MAX_LABELS else (lambda df: df)
-
-    converged = False
-    for _ in range(max_iter):
-        nbr_labels = sym.join(
-            bc(
-                labels.select(
-                    F.col("id").alias("nbr"),
-                    F.col("component").alias("nbr_comp"),
-                )
-            ),
-            "nbr",
-        ).groupBy("id").agg(F.min("nbr_comp").alias("min_nbr"))
-        labels = (
-            labels.join(nbr_labels, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("min_nbr", "component")
-                ).alias("component"),
-            )
-            .transform(ck)
-        )
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # Still shrinking at the round cap -> the labels are NOT
-        # components yet (long-diameter graph). Returning them would be
-        # silently wrong — linkage chains hit exactly this (a sorted
-        # neighborhood is a path graph). Fail loudly and point at the
-        # O(log n) algorithm instead of the O(diameter) one.
-        sym.unpersist()
-        raise RuntimeError(
-            f"min-label propagation did not converge in {max_iter} rounds; "
-            "the graph's diameter exceeds the cap — use "
-            "algorithm='star' (O(log n) rounds) or raise max_iter"
-        )
-    # every round's labels are checkpointed, so the result no longer
-    # depends on the edge cache (ADVICE r14 discipline)
-    sym.unpersist()
     return labels.union(singletons)
 
 
@@ -215,25 +194,27 @@ def _star_components(
     (count, endpoint-sum) precheck gates the exact exceptAll probe.
     Each round is a constant number of shuffles; rounds = O(log n)
     even on paths, vs O(n) for label propagation. Lineage truncated
-    per round via the shared loop contract (operators/loop.py)."""
-    ck = lambda df: loop_checkpoint(df, reliable)  # noqa: E731
-    e = (
+    per round via the shared loop contract (operators/loop.py); a
+    round's input is released once its successor has been compared
+    with it."""
+    e = loop_checkpoint(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(ck)
+        .distinct(),
+        reliable,
     )
-    prev_metrics, prev_e = None, e
-    rounds = 0
+    metrics, rounds = None, 0
     for _ in range(max_iter):
-        e = ck(_small_star(_large_star(e)))
+        nxt = loop_checkpoint(_small_star(_large_star(e)), reliable)
         rounds += 1
-        cnt, ssum = e.agg(
+        cnt, ssum = nxt.agg(
             F.count(F.lit(1)), F.sum(F.col("u") + F.col("v"))
         ).collect()[0]
-        if (cnt, ssum) == prev_metrics and e.exceptAll(prev_e).isEmpty():
+        done = (cnt, ssum) == metrics and nxt.exceptAll(e).isEmpty()
+        release_checkpoint(e)
+        e, metrics = nxt, (cnt, ssum)
+        if done:
             break
-        prev_metrics, prev_e = (cnt, ssum), e
     # At the fixed point every non-root points straight at its
     # component's min id; roots and isolated vertices label themselves.
     labels = (

@@ -77,7 +77,8 @@ def frozen_range_pid(
         # ``materialize=False`` opts out (ADVICE r14) for callers whose
         # input is already materialized (parquet scan, checkpoint) or
         # unbounded — pair the opt-out with operators/loop.py's
-        # disk_materialize when blocks would starve execution memory.
+        # loop_checkpoint(disk=True) when blocks would starve execution
+        # memory.
         if materialize:
             df = df.localCheckpoint()
         n_target = sample_n or max(npart * 20, 200)

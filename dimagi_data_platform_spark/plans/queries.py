@@ -4416,9 +4416,7 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(e0.select(F.col("v").alias("src"), F.col("u").alias("dst")))
     verts = edges.select(F.col("src").alias("id")).distinct()
-    # edges come from the persisted parquet artifact: columnar rescans
-    # per iteration beat a row-format localCheckpoint copy ~3x
-    ranks = pagerank(verts, edges, n_iter=5, materialize_edges=False)
+    ranks = pagerank(verts, edges, n_iter=5)
     return (
         ranks.select(
             F.col("id").alias("p_partkey"),
@@ -4439,8 +4437,8 @@ def part_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     like R57, so the oracle unrolls the identical recurrence (seeded
     start vector, teleport only on seeds) and hash-matches bitwise.
 
-    Scale: operators/graph.personalized_pagerank — same one-shuffle-
-    per-iteration loop as pagerank; the seed set is a 3-row broadcast.
+    Scale: operators/graph.personalized_pagerank — the one PageRank
+    loop (one shuffle per iteration); the seed set is a 3-row join.
     """
     from dimagi_data_platform_spark.operators.graph import personalized_pagerank
 
@@ -4450,9 +4448,7 @@ def part_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(e0.select(F.col("v").alias("src"), F.col("u").alias("dst")))
     verts = edges.select(F.col("src").alias("id")).distinct()
     seeds = verts.orderBy("id").limit(3)
-    ranks = personalized_pagerank(
-        verts, edges, seeds, n_iter=4, materialize_edges=False
-    )
+    ranks = personalized_pagerank(verts, edges, seeds, n_iter=4)
     return (
         ranks.select(
             F.col("id").alias("p_partkey"),
@@ -5485,8 +5481,9 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical min-relaxation recurrence.
 
     Scale: operators/graph.bfs_distances relaxes only the NEW frontier
-    each round (work ∝ frontier out-degree, not reached set), one
-    shuffle join + min-aggregate per round, reached set checkpointed.
+    each round (work ∝ frontier out-degree, not reached set) against
+    the dst-partitioned edge cache, with the frontier and reached sides
+    broadcast under the vertex guard; every frontier is checkpointed.
     The source is a 1-row broadcast — no driver collect.
     """
     from dimagi_data_platform_spark.operators.graph import bfs_distances
@@ -5496,16 +5493,7 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(e0.select(F.col("v").alias("src"), F.col("u").alias("dst")))
     source = edges.agg(F.min("src").alias("id"))
-    # parquet-artifact edges (skip row-format checkpoint copy); the
-    # frontier/reached sides are bounded by the part dimension, so
-    # broadcasting them keeps the edge list un-shuffled every round
-    dists = bfs_distances(
-        edges,
-        source,
-        n_rounds=BFS_ROUNDS,
-        materialize_edges=False,
-        broadcast_frontier=True,
-    )
+    dists = bfs_distances(edges, source, n_rounds=BFS_ROUNDS)
     return (
         dists.groupBy("dist")
         .agg(F.count(F.lit(1)).cast("long").alias("n_parts"))
@@ -9638,51 +9626,19 @@ def copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PageRank R57, BFS R62, BPE L49). Report: top-20 communities by
     size after round 3.
 
-    Scale: per round — ONE edge join against the broadcast vertex-
-    sized label frontier (the pagerank contract) + a (vertex,
-    neighbor-label) groupBy with map-side combine + a degree-bounded
-    per-vertex window; labels localCheckpointed per round. Rounds are
-    O(diameter-ish) constants, not data-driven.
+    Scale: operators/graph.label_propagation — per round ONE edge join
+    against the vertex-sized label frontier (guarded broadcast) + a
+    (vertex, neighbor-label) groupBy with map-side combine + a
+    degree-bounded per-vertex window; labels checkpointed per round.
+    Rounds are O(diameter-ish) constants, not data-driven.
     """
+    from dimagi_data_platform_spark.operators.graph import label_propagation
+
     e0 = _copurchase_edges(spark, sf_dir)
     edges = e0.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(e0.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    # r14 (guide §2.4): ONE upfront src-hash repartition, persisted
-    # WITH lineage, so each round's (src, nlbl) groupBy AND the
-    # per-vertex window (both clustered on src) inherit the cached
-    # partitioning — the 3 per-round label-stream Exchanges disappear
-    # (plans/r14/copurchase_communities_{before,after}.txt)
-    edges = edges.repartition("src").persist()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(3):
-        nbr = (
-            edges.join(
-                F.broadcast(
-                    labels.select(
-                        F.col("id").alias("dst"), F.col("lbl").alias("nlbl")
-                    )
-                ),
-                "dst",
-            )
-            .groupBy("src", "nlbl")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        w = Window.partitionBy("src").orderBy(F.desc("cnt"), F.asc("nlbl"))
-        labels = (
-            nbr.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select(F.col("src").alias("id"), F.col("nlbl").alias("lbl"))
-            .localCheckpoint()
-        )
-    # every round's labels are checkpointed, so the result no longer
-    # depends on the edge cache — release it (ADVICE r14)
-    edges.unpersist()
+    labels = label_propagation(edges, rounds=3)
     return (
         labels.groupBy("lbl")
         .agg(F.count(F.lit(1)).cast("long").alias("n_members"))
@@ -10915,9 +10871,9 @@ def part_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled MATERIALIZED recurrence replays bit-for-bit; a unit test
     certifies round 6 is a fixed point on the test graphs, AND the
     peel now verifies convergence on every run (operators/graph.py
-    k_core_peel — one extra O(m) degree aggregate that FAILS LOUDLY
-    if a denser graph would still peel at round 7, VERDICT r10
-    item 7), so a non-converged core can never be silently returned.
+    k_core_peel — a vertex-sized count that FAILS LOUDLY if a denser
+    graph would still peel at round 7, VERDICT r10 item 7), so a
+    non-converged core can never be silently returned.
 
     Scale (r13 delta rewrite, VERDICT r12 item 2): degrees are counted
     ONCE, then each round touches only the removal frontier's incident
@@ -11590,16 +11546,13 @@ def part_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     x·1e6 DIV max(x) — the fixed-point sibling of R57's damping), so
     the unrolled MATERIALIZED oracle replays bitwise.
 
-    Scale: each half-round is one edge join vs the vertex-sized
-    frontier + a map-side-combined groupBy (R57's per-round cost);
-    normalization is a broadcast 1-row max. Each half-round frontier is
-    localCheckpointed (vertex-sized, like R57's per-round ranks): the
-    max-normalization references its frontier twice (the max aggregate
-    and the scaled projection), so an unmaterialized recurrence doubles
-    the subtree per half-round — 308 Exchanges / 60 SortMergeJoins of
-    recomputed history at 2 rounds (measured r14; truncating the
-    lineage per half-round leaves ~3 Exchanges per segment).
+    Scale: operators/graph.hits_authority — each half-round is one
+    edge join vs the vertex-sized frontier + a map-side-combined
+    groupBy (R57's per-round cost); normalization is a broadcast 1-row
+    max; each half-round frontier is checkpointed.
     """
+    from dimagi_data_platform_spark.operators.graph import hits_authority
+
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     e = (
@@ -11607,76 +11560,12 @@ def part_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    # r14 (guide §2.4): the loop aggregates alternate between keys p
-    # and c, so persist TWO pre-partitioned copies of the edge set
-    # WITH lineage (e_c derives from the e_p cache — the join+distinct
-    # upstream runs once): each half-round's groupBy then inherits the
-    # cached clustering through the broadcast frontier join and needs
-    # no Exchange — 5 edge-stream shuffles become these 2. Released
-    # after the loop (the final frontier is checkpointed; ADVICE r14).
-    from dimagi_data_platform_spark.operators.graph import (
-        BROADCAST_MAX_VERTICES,
-    )
-
-    e_p = e.repartition("p").persist()
-    e_c = e_p.repartition("c").persist()
-    # h0 = 1 per customer: a1(p) = in-degree
-    a = e_p.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("a"))
-    # r15 (guide §3.1, VERDICT r14 item 5): the frontiers are
-    # vertex-sized (all parts / all customers) — broadcast them only
-    # while provably small, with a shuffle-join fallback past the same
-    # guard pagerank uses. The counts are constant across rounds (every
-    # round's frontier covers the same vertex set), so each is counted
-    # ONCE off its first checkpointed frontier.
-    n_parts = n_custs = None
-    for _ in range(2):
-        a = a.localCheckpoint()
-        if n_parts is None:
-            n_parts = a.count()
-        bc_a = (
-            F.broadcast
-            if n_parts <= BROADCAST_MAX_VERTICES
-            else (lambda df: df)
-        )
-        amax = a.agg(F.max("a").alias("m"))
-        a_n = a.crossJoin(F.broadcast(amax)).select(
-            "p", F.expr("CAST((a * 1000000) DIV m AS LONG)").alias("an")
-        )
-        h = (
-            e_c.join(bc_a(a_n), "p")
-            .groupBy("c")
-            .agg(F.sum("an").cast("long").alias("h"))
-            .localCheckpoint()
-        )
-        if n_custs is None:
-            n_custs = h.count()
-        bc_h = (
-            F.broadcast
-            if n_custs <= BROADCAST_MAX_VERTICES
-            else (lambda df: df)
-        )
-        hmax = h.agg(F.max("h").alias("m"))
-        h_n = h.crossJoin(F.broadcast(hmax)).select(
-            "c", F.expr("CAST((h * 1000000) DIV m AS LONG)").alias("hn")
-        )
-        a = (
-            e_p.join(bc_h(h_n), "c")
-            .groupBy("p")
-            .agg(F.sum("hn").cast("long").alias("a"))
-        )
-    a = a.localCheckpoint()
-    e_p.unpersist()
-    e_c.unpersist()
-    amax = a.agg(F.max("a").alias("m"))
     return (
-        a.crossJoin(F.broadcast(amax))
+        hits_authority(e, rounds=2)
         .select(
             F.col("p").alias("p_partkey"),
-            F.expr("CAST((a * 1000000) DIV m AS LONG)").alias("auth_fixed"),
-            (
-                F.expr("CAST((a * 1000000) DIV m AS LONG)").cast("double")
-                / F.lit(1000000.0)
-            ).alias("authority"),
+            F.col("a").alias("auth_fixed"),
+            (F.col("a").cast("double") / F.lit(1000000.0)).alias("authority"),
         )
         .orderBy(F.desc("auth_fixed"), "p_partkey")
         .limit(20)

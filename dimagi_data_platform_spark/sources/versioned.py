@@ -349,13 +349,17 @@ def _null_fill_missing(df: DataFrame, target: DataFrame) -> DataFrame:
     """Additive schema evolution: add any column ``target`` has that
     ``df`` lacks as a NULL of the target's type (Delta mergeSchema
     read semantics). Raises on a same-name type conflict — silent
-    coercion would corrupt CDF diffs."""
-    mine = {f.name: f.dataType for f in df.schema.fields}
+    coercion would corrupt CDF diffs. Types compare with nested
+    nullability erased (the ``asNullable`` view commits record): a
+    table reads back all-nullable, so ``array<string not null>``
+    updates merge into its ``array<string>`` column."""
+    mine = _nullable_types(df)
+    theirs = _nullable_types(target)
     out = df
     for f in target.schema.fields:
         if f.name not in mine:
             out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-        elif mine[f.name] != f.dataType:
+        elif mine[f.name] != theirs[f.name]:
             raise ValueError(
                 f"schema evolution conflict on column {f.name!r}: "
                 f"{mine[f.name].simpleString()} vs "
@@ -363,6 +367,12 @@ def _null_fill_missing(df: DataFrame, target: DataFrame) -> DataFrame:
                 "column) evolution is supported"
             )
     return out
+
+
+def _nullable_types(df: DataFrame) -> dict:
+    """Column name -> type, with nullability erased at every level."""
+    schema = StructType.fromJson(json.loads(df._jdf.schema().asNullable().json()))
+    return {f.name: f.dataType for f in schema.fields}
 
 
 def merge_version(

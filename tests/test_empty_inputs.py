@@ -12,6 +12,7 @@ with the guards mirrored in their oracles."""
 from __future__ import annotations
 
 import os
+import traceback
 
 import duckdb
 import pytest
@@ -54,6 +55,8 @@ def one_row_sf(tmp_path_factory):
 # largest module; motivated by the driver's VERIFY window (r14
 # tests_ok=false was the suite outrunning the window, not a failure).
 _POOL = 8
+# characters of each failure's traceback kept in the report
+_TB_TAIL = 1500
 
 
 def _sweep(spark, sf: str) -> list[str]:
@@ -64,7 +67,8 @@ def _sweep(spark, sf: str) -> list[str]:
             QUERIES[name](spark, sf).collect()
             return None
         except Exception as e:  # noqa: BLE001 - reported via assert
-            return f"{name}: {type(e).__name__}: {e}"
+            tb = traceback.format_exc()[-_TB_TAIL:]
+            return f"{name}: {type(e).__name__}: {e}\n{tb}"
 
     with ThreadPoolExecutor(max_workers=_POOL) as pool:
         errs = [r for r in pool.map(one, sorted(QUERIES)) if r]

@@ -503,3 +503,111 @@ def test_reliable_checkpoint_identical(spark, tmp_path):
         ).collect()
     }
     assert cs_a == cs_b
+
+
+def _checkpoints_read(df) -> set[int]:
+    """Ids of the RDDs under ``df``'s LogicalRDD leaves — the
+    checkpoints (and in-memory inputs) its plan still reads."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+def test_iterative_kernels_release_loop_state(spark):
+    """Every iterative kernel follows the operators/loop.py contract:
+    once its result is collected the edge cache is gone (CacheManager
+    empty) and every persisted RDD it added is a checkpoint the result
+    still reads — superseded rounds are released. A loop that raises
+    leaves nothing behind."""
+    import pandas as pd
+    import pytest as _pytest
+
+    from dimagi_data_platform_spark.operators.bpe import (
+        bpe_train,
+        bpe_train_apply,
+    )
+    from dimagi_data_platform_spark.operators.graph import (
+        bfs_distances,
+        hits_authority,
+        k_core_degrees,
+        k_core_peel,
+        label_propagation,
+        pagerank,
+        personalized_pagerank,
+    )
+
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def persisted() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    def frame(rows, schema):
+        # built from pandas (Arrow), so the ~200 jobs of this sweep
+        # scan JVM-side rows instead of round-tripping Python workers
+        cols = [c.split()[0] for c in schema.split(",")]
+        return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
+
+    # a triangle, a pair and an isolated (dangling) vertex
+    und = [(1, 2), (2, 3), (3, 1), (4, 5)]
+    edges = frame(
+        und + [(b, a) for a, b in und], "src long, dst long"
+    )
+    verts = frame([(i,) for i in range(1, 7)], "id long")
+    seeds = frame([(1,), (4,)], "id long")
+    src = frame([(1,)], "id long")
+    wf = frame(
+        [("low", 5), ("lower", 2), ("newest", 3), ("widest", 1)],
+        "w string, freq long",
+    )
+    kernels = {
+        "cc_propagate": lambda: connected_components(verts, edges),
+        "cc_star": lambda: connected_components(
+            verts, edges, algorithm="star", max_iter=2
+        ),
+        "pagerank": lambda: pagerank(verts, edges, n_iter=2),
+        "ppr": lambda: personalized_pagerank(verts, edges, seeds, n_iter=1),
+        "bfs": lambda: bfs_distances(edges, src, 2),
+        "k_core_peel": lambda: k_core_peel(edges, 2, 3),
+        "k_core_degrees": lambda: k_core_degrees(edges, 2, 3),
+        "bpe_train": lambda: bpe_train(wf, 2),
+        "bpe_train_apply": lambda: bpe_train_apply(wf, 2),
+        "lpa": lambda: label_propagation(edges, 2),
+        "hits": lambda: hits_authority(
+            edges.select(F.col("src").alias("c"), F.col("dst").alias("p")), 1
+        ),
+    }
+    spark.catalog.clearCache()
+    for name, run in kernels.items():
+        before = persisted()
+        out = run()
+        out.collect()
+        added = persisted() - before
+        reads = _checkpoints_read(out)
+        assert cache.isEmpty(), f"{name}: edge cache left in the CacheManager"
+        assert added <= reads, (
+            f"{name}: {len(added)} persisted RDDs added, "
+            f"{len(added - reads)} of them not read by the result"
+        )
+
+    # a path: propagation needs its diameter in rounds, and the 2-core
+    # peel drains it from both ends, two vertices per round
+    path = frame(
+        [(i, i + 1) for i in range(1, 6)] + [(i + 1, i) for i in range(1, 6)],
+        "src long, dst long",
+    )
+    raising = {
+        "cc_propagate past max_iter": lambda: connected_components(
+            verts, path, max_iter=1
+        ),
+        "k_core guard": lambda: k_core_peel(path, k=2, rounds=1),
+    }
+    for name, run in raising.items():
+        before = persisted()
+        with _pytest.raises(RuntimeError):
+            run()
+        assert cache.isEmpty(), f"{name}: edge cache left after the raise"
+        assert persisted() <= before, f"{name}: checkpoints left after the raise"
