@@ -23,7 +23,7 @@ a crash anywhere re-processes the same batch on resume — and every
 write in the chain is CONVERGENT under re-processing:
 
   - staging: copy-on-write MERGE, latest-wins on (event_id, ts) — a
-    replayed batch rewrites the same rows to the same values;
+    replayed batch rewrites the same days to the same rows;
   - indicator tables: versioned MERGE keyed on the indicator grain,
     ordered by the batch watermark stamp (a replay carries the same
     stamp; ties resolve update-wins to the identical row);
@@ -58,11 +58,17 @@ history, not the corpus —
     event rescan (churned is monotone: the horizon only advances).
 
 The versioned MERGE + JDBC MERGE then update only those grains. The
-staging merge is the standard key-shuffled copy-on-write cost. Below
-the row work sits a fixed per-batch job floor (about 50 Spark jobs:
-one write job per versioned commit, plus the eager checkpoints, the
-touched-grain joins and the publish); versioned commits add no
-read-back count or schema-inference jobs to it.
+staging table is created day-partitioned on ``ts``
+(``sources/versioned.py``), so its merge rewrites only the UTC days
+the batch touches, plus any day that already holds one of the batch's
+event ids (one key probe of the staged table); every other day's file
+is shared with the previous version. The indicator tables still
+rewrite in full. Below the row work sits a fixed per-batch job floor
+(about 50 Spark jobs: one write job per versioned commit, plus the
+staging key probe, the eager checkpoints, the touched-grain joins and
+the publish); versioned commits add no read-back count or
+schema-inference jobs to it. A staging table created unpartitioned
+(before this layout) keeps merging in full.
 
 Resubmission contract (matches the reference's form-resubmission
 semantics): a resubmitted event (same event_id, later ts) may change
@@ -120,20 +126,6 @@ class PlatformEtlConfig:
     publish: tuple[str, ...] = ("monthly_usage",)
     watermark_name: str = "events"
     fail_after: str | None = None
-    #: staging-table layout. ``versioned`` (default): snapshot-isolated
-    #: copy-on-write MERGE (P62) — time travel + CDF, but every batch
-    #: rewrites the WHOLE staged table (measured: a 1%-of-corpus batch
-    #: at sf1 cost 1.6x a full indicator rebuild, staging merge
-    #: dominating). ``partitioned``: the P18 path — event-date
-    #: partitions, a batch rewrites ONLY its touched days (dynamic
-    #: partition overwrite), the 100 TB posture. Results are
-    #: layout-identical (tested); convergence holds because a replay
-    #: re-overwrites the same touched partitions to the same content.
-    #: Equal-ts resubmissions are assumed content-identical delivery
-    #: retries (the documented resubmission contract carries a LATER
-    #: ts), so the partitioned window's ts-only ordering is
-    #: deterministic in effect.
-    staging_layout: str = "versioned"
 
 
 # indicator grain keys (also the MERGE keys, versioned and JDBC)
@@ -255,9 +247,12 @@ def _merge_or_init(
     keys: list[str],
     order_col: str,
     commit_ts: str,
+    day_partition: str | None = None,
 ) -> int:
+    """Merge into the table, or create it (day-partitioned on
+    ``day_partition`` if given) from the first batch."""
     if not history(path):
-        return write_version(updates, path, commit_ts)
+        return write_version(updates, path, commit_ts, day_partition=day_partition)
     return merge_version(spark, path, updates, keys, order_col, commit_ts)
 
 
@@ -405,38 +400,21 @@ def _run_batch(
     commit_ts = stats.m
     _maybe_fail(cfg, "ingest")
 
-    # staging MERGE: latest-wins resubmission dedup on event_id —
-    # P62 versioned copy-on-write or the P18 touched-days-only
-    # partitioned upsert, per cfg.staging_layout
+    # staging MERGE: latest-wins resubmission dedup on event_id; the
+    # table is stored by UTC day of ts, so a batch rewrites only the
+    # days it touches
     staging_path = f"{cfg.warehouse}/staging_events"
-    if cfg.staging_layout == "partitioned":
-        from dimagi_data_platform_spark.sources.incremental import (
-            upsert_partitioned,
-        )
-
-        upsert_partitioned(
-            spark,
-            batch.withColumn("event_date", F.to_date("ts")),
-            staging_path,
-            keys=["event_id"],
-            order_col="ts",
-            partition_col="event_date",
-        )
-        v = 0
-    else:
-        v = _merge_or_init(
-            spark, staging_path, batch, ["event_id"], "ts", commit_ts
-        )
+    v = _merge_or_init(
+        spark, staging_path, batch, ["event_id"], "ts", commit_ts,
+        day_partition="ts",
+    )
     report["stages"].append(("stage_merge", v))
     _maybe_fail(cfg, "stage_merge")
 
     # indicators recompute ONLY the touched users' grains, from the
     # full staged history of those users
     users = batch.select("user_id").distinct()
-    if cfg.staging_layout == "partitioned":
-        staged = spark.read.parquet(staging_path).drop("event_date")
-    else:
-        staged = read_version(spark, staging_path)
+    staged = read_version(spark, staging_path)
     scoped = pin(staged.join(F.broadcast(users), "user_id", "semi"))
     wm_stamp = F.lit(int(new_wm)).cast("long").alias("_etl_wm")
     updates: dict[str, DataFrame] = {}

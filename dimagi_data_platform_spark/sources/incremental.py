@@ -86,8 +86,10 @@ def upsert_partitioned(
     table, rewriting ONLY the partitions the batch touches.
 
     Shape (the scalable file-level upsert):
-      1. dynamic partition-overwrite mode — partitions absent from the
-         written frame are left untouched on disk;
+      1. dynamic partition overwrite, set on each write (not on the
+         session, so later overwrites elsewhere keep their mode) —
+         partitions absent from the written frame are left untouched
+         on disk;
       2. existing rows are read back only for the touched partitions
          (partition-pruned scan via the IN filter);
       3. union + one (keys)-shuffled window keeps the newest row per
@@ -105,9 +107,13 @@ def upsert_partitioned(
 
     from pyspark.sql import Window as _W
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    def write(df: DataFrame) -> None:
+        df.write.partitionBy(partition_col).mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(path)
+
     if not _os.path.exists(path):
-        updates.write.partitionBy(partition_col).mode("overwrite").parquet(path)
+        write(updates)
         return
     touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
     old = spark.read.parquet(path).filter(F.col(partition_col).isin(touched))
@@ -119,5 +125,5 @@ def upsert_partitioned(
         .drop("_rn")
         .localCheckpoint()
     )
-    latest.write.partitionBy(partition_col).mode("overwrite").parquet(path)
+    write(latest)
     release_checkpoint(latest)

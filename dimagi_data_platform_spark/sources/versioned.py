@@ -47,16 +47,44 @@ the ``delta/`` rows' schema as ``schema`` and the ``dv/`` keys' as
 ``dv_schema``. Entries written before these fields existed have no
 ``schema`` and read through inference, unchanged.
 
-``_manifest.json`` survives as a DERIVED read cache (legacy layout,
-rewritten best-effort after each commit); ``history()`` always unions
-it with the commit log, log entries winning, so a stale cache can
-never hide or resurrect a version.
+**Day-partitioned tables (Iceberg-style hidden partitioning).** A
+table may record at its first ``write_version`` (``day_partition=<ts
+column>``) that its rows are stored one directory per UTC day of that
+timestamp column. The stored rows and the read schema are unchanged; the
+commit entry carries ``day_col`` and ``parts`` (day -> table-relative
+directory), and every reader (``read_version``, ``read_changes``,
+``compact_version``, ``vacuum``) finds a version's data through that
+list. ``merge_version`` on such a table rewrites only the days its
+updates fall on plus the days that already hold an updated key (one
+column-pruned key probe of the base), and the new entry reuses the
+previous version's directory for every other day. Each write groups its
+rows by day, so a day is one file. Versions of a day-partitioned table
+keep their staged directory name (no ``v=<n>`` rename: later versions
+point into it by path), and ``vacuum`` deletes a day directory only when
+no kept version lists it. ``merge_version_dv`` refuses such a table:
+its scoped copy-on-write already writes only the touched days.
 
-Scale: a version commit writes only the new snapshot's files; reads
-are ordinary parquet scans of exactly one version directory (all
-pushdown/pruning intact). For tables where full copy-on-write is too
-expensive, use upsert_partitioned (touched-partitions-only) and treat
-each partition overwrite as the commit unit.
+Legacy tables kept their entries in ``_manifest.json`` only;
+``history()`` unions that file with the commit log (log entries
+winning), and ``vacuum`` rewrites it to the kept entries so a dropped
+version cannot come back. A commit writes only its own commit-log
+entry, never a file that grows with the number of versions.
+
+Scale: an unpartitioned commit writes the whole new snapshot; a scoped
+merge on a day-partitioned table writes the touched days and reads the
+base's key and day columns once. A snapshot read of an unpartitioned
+version scans one directory; a day-partitioned one passes one root path
+per day to the parquet scan (all pushdown/pruning intact). Spark lists
+up to ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+root paths on the driver; a version with more days than that lists them
+in a separate distributed Spark job (one task per day directory) each
+time a read of it is built: one job per ``read_version``, and one per
+``merge_version``, whose key probe reads the whole base. Measured on
+the hourly ETL benchmark with a 45-day staged history (46 day
+directories, 4-core host, seed 11): the timed batch ran 57 Spark jobs
+(55 at 31 days, 52 for the unpartitioned table), its versioned reads
+took 0.19 s against 0.05 s unpartitioned, and the staging merge took
+0.52 s against 0.45 s, while it wrote 6.6 MB against 14.1 MB.
 """
 
 from __future__ import annotations
@@ -74,6 +102,12 @@ from pyspark.sql.types import StructType
 MANIFEST = "_manifest.json"
 COMMIT_DIR = "_commits"
 STAGE_PREFIX = "_stage-"
+#: partition column of a day-partitioned write; it names the day
+#: directories (``__day=2024-01-31``) and is never a read column
+_DAY_DIR = "__day"
+#: the directory Spark writes NULL partition values to
+_NULL_DAY = "__HIVE_DEFAULT_PARTITION__"
+_DAY_US = 86_400_000_000
 
 
 class CommitConflictError(Exception):
@@ -97,9 +131,9 @@ def _entry_path(path: str, version: int) -> str:
 def history(path: str) -> list[dict]:
     """Committed versions, oldest first: [{version, commit_ts, n_rows}].
 
-    Union of the commit log (authoritative) and the legacy/cache
-    manifest; a commit-log entry always wins over a cache entry of the
-    same version number."""
+    Union of the commit log (authoritative) and the legacy manifest; a
+    commit-log entry always wins over a manifest entry of the same
+    version number."""
     entries: dict[int, dict] = {}
     mp = _manifest_path(path)
     if os.path.exists(mp):
@@ -120,17 +154,6 @@ def history(path: str) -> list[dict]:
     return [entries[k] for k in sorted(entries)]
 
 
-def _refresh_manifest_cache(path: str) -> None:
-    """Best-effort rewrite of the derived read cache from the full
-    union; concurrent rewrites can't lose data because history()
-    always re-unions with the commit log."""
-    versions = history(path)
-    fd, tmp = tempfile.mkstemp(dir=path, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"versions": versions}, f)
-    os.replace(tmp, _manifest_path(path))
-
-
 def _commit(path: str, entry: dict) -> None:
     """Atomic CAS commit of one version entry: link a fully-written
     temp file to ``_commits/<version>.json``; EEXIST = another writer
@@ -149,7 +172,6 @@ def _commit(path: str, entry: dict) -> None:
             ) from None
     finally:
         os.unlink(tmp)
-    _refresh_manifest_cache(path)
 
 
 def _data_dir(path: str, entry: dict) -> str:
@@ -194,6 +216,97 @@ def _read_parquet(spark: SparkSession, d: str, schema: str | None) -> DataFrame:
     if schema is None:
         return spark.read.parquet(d)
     return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(d)
+
+
+def _day_of(col: str):
+    """UTC day of a timestamp column as a DATE, whatever the session
+    time zone (``unix_micros`` and epoch days carry none)."""
+    return F.date_from_unix_date(
+        F.floor(F.unix_micros(F.col(col)) / F.lit(_DAY_US)).cast("int")
+    )
+
+
+def _write_days(
+    df: DataFrame, path: str, day_col: str
+) -> tuple[str, int, str, dict[str, str]]:
+    """Write df into a fresh staged directory, one subdirectory per UTC
+    day of ``day_col``; rows are grouped by day first, so each day is
+    one file. Returns (staged dir name, row count, schema JSON,
+    {day: table-relative directory})."""
+    stage = _new_stage(path)
+    out = os.path.join(path, stage)
+    obs = Observation()
+    (
+        df.withColumn(_DAY_DIR, _day_of(day_col))
+        .repartition(_DAY_DIR)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.partitionBy(_DAY_DIR)
+        .mode("overwrite")
+        .parquet(out)
+    )
+    prefix = f"{_DAY_DIR}="
+    parts = {
+        name[len(prefix):]: f"{stage}/{name}"
+        for name in os.listdir(out)
+        if name.startswith(prefix)
+    }
+    return stage, int(obs.get["n"]), df._jdf.schema().asNullable().json(), parts
+
+
+def _read_entry(
+    spark: SparkSession, path: str, e: dict, days: set[str] | None = None
+) -> DataFrame:
+    """The rows one materialized entry stores: its data directory, or for
+    a day-partitioned entry the listed directories of ``days`` (all days
+    when None). Day directories are passed as scan roots, so no
+    partition column is inferred from their names."""
+    if "parts" not in e:
+        return _read_parquet(spark, _data_dir(path, e), e.get("schema"))
+    schema = StructType.fromJson(json.loads(e["schema"]))
+    dirs = [
+        os.path.join(path, d)
+        for day, d in sorted(e["parts"].items())
+        if days is None or day in days
+    ]
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*dirs)
+
+
+def _touched_days(
+    base: DataFrame, updates: DataFrame, keys: list[str], day_col: str
+) -> set[str]:
+    """The days a latest-wins merge of ``updates`` can change: every day
+    an update falls on, plus every day of the base that already holds
+    an updated key (one probe of the base's key and day columns), so a
+    key whose update moves it to another day leaves its old day
+    rewritten too. Keys match null-safe: the merge's window groups NULL
+    keys together, so a stored NULL key is an updated key too."""
+    day = _day_of(day_col).alias(_DAY_DIR)
+    probe = [f"__k{i}" for i in range(len(keys))]
+    held = (
+        base.select(*keys, day)
+        .join(
+            updates.select(*[F.col(k).alias(p) for k, p in zip(keys, probe)]),
+            [F.col(k).eqNullSafe(F.col(p)) for k, p in zip(keys, probe)],
+            "left_semi",
+        )
+        .select(_DAY_DIR)
+    )
+    # the distinct days arrive as an observed set, so the probe runs
+    # without a shuffle
+    obs = Observation()
+    name = F.coalesce(F.col(_DAY_DIR).cast("string"), F.lit(_NULL_DAY))
+    updates.select(day).union(held).observe(
+        obs, F.collect_set(name).alias("days")
+    ).write.format("noop").mode("overwrite").save()
+    return set(obs.get["days"])
+
+
+def _has_repeated_key(df: DataFrame, keys: list[str]) -> bool:
+    """Whether some key holds more than one row of ``df`` (NULL keys
+    group together, as in a merge's window)."""
+    return bool(df.groupBy(*keys).count().filter(F.col("count") > 1).head(1))
 
 
 def _promote(path: str, stage: str, version: int) -> None:
@@ -248,12 +361,17 @@ def _commit_staged(
     if extra:
         entry.update(extra)
     _commit(path, entry)
-    _promote(path, stage, n)
+    if "parts" not in entry:  # later versions point into a day layout
+        _promote(path, stage, n)
     return n
 
 
 def write_version(
-    df: DataFrame, path: str, commit_ts: str, extra: dict | None = None
+    df: DataFrame,
+    path: str,
+    commit_ts: str,
+    extra: dict | None = None,
+    day_partition: str | None = None,
 ) -> int:
     """Commit ``df`` as the next immutable version; returns its number.
 
@@ -270,8 +388,25 @@ def write_version(
     streaming sink stamps its micro-batch id this way, so "data
     committed" and "batch id recorded" are one atomic link — there is
     no crash window where the state exists but the replay marker
-    doesn't)."""
-    stage, n_rows, schema = _stage_write(df, path)
+    doesn't).
+
+    ``day_partition`` names a timestamp column; the table's first
+    version then records that its rows are stored one directory per
+    UTC day of it (module docstring). The layout is fixed when the
+    table is created: later writes keep it, and asking an existing
+    table for another one raises."""
+    versions = history(path)
+    day_col = versions[-1].get("day_col") if versions else day_partition
+    if day_partition is not None and day_partition != day_col:
+        raise ValueError(
+            f"{path} is stored by {day_col or 'no day column'}; its layout "
+            "is fixed when the table is created"
+        )
+    if day_col:
+        stage, n_rows, schema, parts = _write_days(df, path, day_col)
+        extra = {**(extra or {}), "day_col": day_col, "parts": parts}
+    else:
+        stage, n_rows, schema = _stage_write(df, path)
     while True:
         try:
             return _commit_staged(path, stage, n_rows, schema, commit_ts, extra)
@@ -306,7 +441,7 @@ def _resolve_snapshot(
                 "table state)"
             )
         e = by_n[base_n]
-    out = _read_parquet(spark, _data_dir(path, e), e.get("schema"))
+    out = _read_entry(spark, path, e)
     for link in reversed(chain):
         d = _data_dir(path, link)
         keys = link["keys"]
@@ -397,11 +532,24 @@ def merge_version(
     (serializable: the retried merge logically applies after the
     winner). Schema evolution is additive: updates may carry NEW
     columns (old rows read as NULL) and may omit base columns (update
-    rows insert NULL there); a same-name type change raises."""
+    rows insert NULL there); a same-name type change raises.
+
+    On a day-partitioned table the merge reads and rewrites only the
+    days it can change (``_touched_days``): base rows on every other day
+    hold no updated key, so the whole-table merge would keep them as
+    they are, and the new entry lists their directories unchanged. That
+    holds only for a base with one row per key, which a merge's output
+    always has and a blind ``write_version`` may not: a base not stamped
+    ``keys_unique`` for ``keys`` is probed for a repeated key first (one
+    key-grain aggregation), and a base that has one merges whole, as the
+    unpartitioned table would, collapsing the repeats. Every merge
+    result is stamped, so only the first merge after a blind write
+    pays the probe."""
     from pyspark.sql import Window
 
     while True:
-        base_n = history(path)[-1]["version"]
+        base_e = history(path)[-1]
+        base_n = base_e["version"]
         base = read_version(spark, path, base_n)
         # additive-only evolution: updates may ADD columns (base rows
         # read NULL there), but an update missing a base column is
@@ -413,6 +561,18 @@ def merge_version(
                 f"updates are missing base column(s) {dropped} — schema "
                 "evolution is additive only (drift would NULL matched rows)"
             )
+        day_col = base_e.get("day_col")
+        if day_col:
+            unique = base_e.get("keys_unique") and base_e.get("keys") == list(keys)
+            if unique or not _has_repeated_key(base, keys):
+                days = _touched_days(base, updates, keys, day_col)
+            else:
+                days = set(base_e["parts"])
+            stored = days & base_e["parts"].keys()
+            base = _read_entry(spark, path, base_e, stored)
+            if stored:
+                read = Observation()
+                base = base.observe(read, F.count(F.lit(1)).alias("n"))
         base_f = _null_fill_missing(base, updates)
         # update rows sort after base rows on ties -> "WHEN MATCHED UPDATE"
         tagged = base_f.withColumn("__src", F.lit(0)).unionByName(
@@ -429,10 +589,22 @@ def merge_version(
         # no materialization needed before the write: it lands in a
         # fresh staged directory while the base version it reads stays
         # immutable (OCC never writes over a committed version)
-        stage, n_rows, schema = _stage_write(merged, path)
+        if day_col:
+            stage, n_new, schema, parts = _write_days(merged, path, day_col)
+            n_old = int(read.get["n"]) if stored else 0
+            kept = {d: p for d, p in base_e["parts"].items() if d not in days}
+            n_rows = base_e["n_rows"] - n_old + n_new
+            layout = {
+                "day_col": day_col, "parts": {**kept, **parts},
+                "keys": list(keys), "keys_unique": True,
+            }
+        else:
+            stage, n_rows, schema = _stage_write(merged, path)
+            layout = {}
         try:
             return _commit_staged(
-                path, stage, n_rows, schema, commit_ts, extra,
+                path, stage, n_rows, schema, commit_ts,
+                {**(extra or {}), **layout},
                 expect_version=base_n + 1,
             )
         except CommitConflictError:
@@ -513,7 +685,11 @@ def merge_version_dv(
     ``compact_version`` (read plans stay O(1); pass ``None`` to manage
     compaction externally). The chain depth each commit leaves behind
     is recorded in its entry (``dv_depth``) for history()
-    observability."""
+    observability.
+
+    A day-partitioned table raises ``ValueError``: its ``merge_version``
+    already writes only the touched days, and a deletion vector over a
+    day layout would need per-day chains."""
     from pyspark.sql import Window
 
     while True:
@@ -521,6 +697,12 @@ def merge_version_dv(
         by_n = {v["version"]: v for v in versions}
         base_entry = versions[-1]
         base_n = base_entry["version"]
+        if base_entry.get("day_col"):
+            raise ValueError(
+                f"{path} is day-partitioned on {base_entry['day_col']!r}: "
+                "merge-on-read is not supported there; merge_version "
+                "rewrites only the touched days"
+            )
         base = read_version(spark, path, base_n)
         dropped_cols = [c for c in base.columns if c not in updates.columns]
         if dropped_cols:
@@ -550,14 +732,7 @@ def merge_version_dv(
             "keys"
         ) == list(keys)
         if not verified:
-            dup = (
-                b_keys.groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
+            if _has_repeated_key(b_keys, keys):
                 raise ValueError(
                     f"base version {base_n} at {path} has duplicate rows "
                     f"per key {keys} — merge_version_dv requires the "
@@ -634,14 +809,23 @@ def compact_version(
     retire the chain. Runs concurrently with ingest MERGEs under the
     same optimistic protocol — a compaction that loses the CAS
     recompacts the winner's snapshot, so neither writer's rows are
-    ever lost."""
+    ever lost. A day-partitioned table keeps its layout: every day is
+    rewritten as one file, and ``target_files`` does not apply."""
     while True:
-        base_n = history(path)[-1]["version"]
-        snap = read_version(spark, path, base_n).coalesce(target_files)
-        stage, n_rows, schema = _stage_write(snap, path)
+        base_e = history(path)[-1]
+        base_n = base_e["version"]
+        snap = read_version(spark, path, base_n)
+        extra = {"compaction": True}
+        if base_e.get("day_col"):
+            stage, n_rows, schema, parts = _write_days(
+                snap, path, base_e["day_col"]
+            )
+            extra.update(day_col=base_e["day_col"], parts=parts)
+        else:
+            stage, n_rows, schema = _stage_write(snap.coalesce(target_files), path)
         try:
             return _commit_staged(
-                path, stage, n_rows, schema, commit_ts, {"compaction": True},
+                path, stage, n_rows, schema, commit_ts, extra,
                 expect_version=base_n + 1,
             )
         except CommitConflictError:
@@ -649,11 +833,19 @@ def compact_version(
             continue
 
 
+def _entry_dirs(e: dict) -> set[str]:
+    """Table-relative directories holding a version's data: its listed
+    day directories, or its ``v=<n>`` and staged names."""
+    if "parts" in e:
+        return set(e["parts"].values())
+    return {f"v={e['version']}"} | ({e["dir"]} if e.get("dir") else set())
+
+
 def vacuum(
     path: str, keep_last: int, stage_retention_sec: float = 86400.0
 ) -> list[int]:
     """Drop all but the newest ``keep_last`` versions; returns the
-    dropped version numbers. Commit-log entries (and the cache)
+    dropped version numbers. Commit-log entries (and a legacy manifest)
     truncate FIRST, file deletion follows — a crash leaves garbage
     directories, never a log entry pointing at deleted data. Also
     sweeps unreferenced staged directories (crashed or raced writers'
@@ -685,29 +877,33 @@ def vacuum(
             frontier.append(b)
     drop = [v for v in versions if v["version"] not in keep_ns]
     keep = [v for v in versions if v["version"] in keep_ns]
-    live_dirs = {f"v={v['version']}" for v in keep} | {
-        v.get("dir") for v in keep if v.get("dir")
-    }
-    # 1) drop entries from the commit log (atomic unlinks), then cache
+    # a day directory may be listed by later versions than the one that
+    # wrote it: delete only what no kept version lists
+    live = set().union(*(_entry_dirs(v) for v in keep))
+    live_tops = {d.split("/", 1)[0] for d in live}
+    # 1) drop entries from the commit log (atomic unlinks), then rewrite
+    # the legacy manifest so its union cannot bring them back
     for v in drop:
         try:
             os.unlink(_entry_path(path, v["version"]))
         except FileNotFoundError:
             pass
-    fd, tmp = tempfile.mkstemp(dir=path, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"versions": keep}, f)
-    os.replace(tmp, _manifest_path(path))
+    if os.path.exists(_manifest_path(path)):
+        fd, tmp = tempfile.mkstemp(dir=path, suffix=".manifest.tmp")
+        with os.fdopen(fd, "w") as f:
+            json.dump({"versions": keep}, f)
+        os.replace(tmp, _manifest_path(path))
     # 2) delete dropped data + orphaned stage dirs
     dropped = []
     for v in drop:
-        shutil.rmtree(os.path.join(path, f"v={v['version']}"), ignore_errors=True)
-        if v.get("dir"):
+        for d in _entry_dirs(v) - live:
+            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+        if v.get("dir") and v["dir"] not in live_tops:
             shutil.rmtree(os.path.join(path, v["dir"]), ignore_errors=True)
         dropped.append(v["version"])
     sweep_before = _time.time() - stage_retention_sec
     for name in os.listdir(path):
-        if name.startswith(STAGE_PREFIX) and name not in live_dirs:
+        if name.startswith(STAGE_PREFIX) and name not in live_tops:
             try:
                 mtime = os.stat(os.path.join(path, name)).st_mtime
             except OSError:

@@ -265,123 +265,80 @@ def test_platform_etl_stream_twin_matches_batch(spark, tmp_path):
     )
     assert len([r for r in reports if not r.get("no_op")]) >= 3
 
-    # stream twin x partitioned staging (the feature combination)
-    wh_sp = str(tmp_path / "wh_stream_part")
-    run_platform_etl_stream(
-        spark,
-        PlatformEtlConfig(
-            source_events=src_s,
-            warehouse=wh_sp,
-            jdbc_url=None,
-            staging_layout="partitioned",
-        ),
-        checkpoint_dir=str(tmp_path / "ckpt_part"),
-        max_files_per_trigger=1,
-    )
-
-    for wh in (wh_s, wh_sp):
-        for name in INDICATOR_TABLES:
-            got = serve_indicator(spark, wh, name)
-            want = serve_indicator(spark, wh_b, name)
-            cols = sorted(want.columns)
-            assert sorted(
-                map(tuple, got.select(*cols).collect()), key=repr
-            ) == sorted(
-                map(tuple, want.select(*cols).collect()), key=repr
-            ), (wh, name)
-    gs = read_version(spark, f"{wh_s}/staging_events")
-    gp = spark.read.parquet(f"{wh_sp}/staging_events").drop("event_date")
-    bs = read_version(spark, f"{wh_b}/staging_events")
-    cols = sorted(bs.columns)
-    want_rows = sorted(map(tuple, bs.select(*cols).collect()), key=repr)
-    for stag in (gs, gp):
-        assert (
-            sorted(map(tuple, stag.select(*cols).collect()), key=repr)
-            == want_rows
-        )
-
-
-def test_platform_etl_partitioned_staging_layout(spark, tmp_path):
-    """The P18 staging layout (event-date partitions, touched-days-only
-    rewrite) produces a warehouse IDENTICAL to the versioned layout on
-    every indicator table and on staging content, survives a crash
-    between stages, and provably leaves untouched date partitions'
-    files alone on the second batch (the 100 TB posture: batch cost
-    scales with touched days, not corpus)."""
-    import os as _os
-
-    from dimagi_data_platform_spark.plans.etl import (
-        INDICATOR_TABLES,
-        serve_indicator,
-    )
-
-    ev, cut, src = _split_events(spark, tmp_path)
-
-    # versioned-layout reference, two batches
-    wh_v = str(tmp_path / "wh_v")
-    cfg_v = PlatformEtlConfig(source_events=src, warehouse=wh_v, jdbc_url=None)
-    run_platform_etl(spark, cfg_v)
-    ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(src)
-    run_platform_etl(spark, cfg_v)
-
-    # partitioned layout, same two batches + a crash between stages
-    src2 = str(tmp_path / "src_p")
-    ev.filter(F.unix_micros("ts") <= cut).write.parquet(src2)
-    wh_p = str(tmp_path / "wh_p")
-
-    def cfg_p(fail_after=None):
-        return PlatformEtlConfig(
-            source_events=src2,
-            warehouse=wh_p,
-            jdbc_url=None,
-            staging_layout="partitioned",
-            fail_after=fail_after,
-        )
-
-    with pytest.raises(RuntimeError, match="injected crash"):
-        run_platform_etl(spark, cfg_p("stage_merge"))
-    run_platform_etl(spark, cfg_p())
-    stag = f"{wh_p}/staging_events"
-    parts_before = {
-        d: _os.path.getmtime(_os.path.join(stag, d))
-        for d in _os.listdir(stag)
-        if d.startswith("event_date=")
-    }
-    ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(src2)
-    run_platform_etl(spark, cfg_p())
-
-    # untouched partitions (strictly before the second batch's days)
-    # keep their files byte-untouched
-    batch2_min_day = (
-        ev.filter(F.unix_micros("ts") > cut)
-        .agg(F.min(F.to_date("ts")).cast("string"))
-        .collect()[0][0]
-    )
-    untouched = [
-        d
-        for d in parts_before
-        if d.split("=", 1)[1] < batch2_min_day
-    ]
-    assert untouched, "test premise: batch 1 must own some older days"
-    for d in untouched:
-        assert _os.path.getmtime(_os.path.join(stag, d)) == parts_before[d], d
-
-    # layout equivalence: staging + every indicator table
-    gs = spark.read.parquet(stag).drop("event_date")
-    bs = read_version(spark, f"{wh_v}/staging_events")
-    cols = sorted(bs.columns)
-    assert sorted(
-        map(tuple, gs.select(*cols).collect()), key=repr
-    ) == sorted(map(tuple, bs.select(*cols).collect()), key=repr)
     for name in INDICATOR_TABLES:
-        got = serve_indicator(spark, wh_p, name)
-        want = serve_indicator(spark, wh_v, name)
+        got = serve_indicator(spark, wh_s, name)
+        want = serve_indicator(spark, wh_b, name)
         cols = sorted(want.columns)
         assert sorted(
             map(tuple, got.select(*cols).collect()), key=repr
         ) == sorted(
             map(tuple, want.select(*cols).collect()), key=repr
         ), name
+    gs = read_version(spark, f"{wh_s}/staging_events")
+    bs = read_version(spark, f"{wh_b}/staging_events")
+    cols = sorted(bs.columns)
+    assert sorted(map(tuple, gs.select(*cols).collect()), key=repr) == sorted(
+        map(tuple, bs.select(*cols).collect()), key=repr
+    )
+
+
+def test_platform_etl_partitioned_staging_layout(spark, tmp_path):
+    """``staging_events`` is stored by UTC day of ``ts``: the second
+    batch's merge survives a crash between stages, rewrites only the
+    days the batch falls on, and leaves every older day's directory and
+    files untouched (batch cost scales with touched days, not corpus),
+    while the staged rows stay exactly the source events."""
+    from dimagi_data_platform_spark.sources.versioned import history
+
+    ev, cut, src = _split_events(spark, tmp_path)
+    wh = str(tmp_path / "wh_part")
+
+    def cfg(fail_after=None):
+        return PlatformEtlConfig(
+            source_events=src,
+            warehouse=wh,
+            jdbc_url=None,
+            fail_after=fail_after,
+        )
+
+    run_platform_etl(spark, cfg())
+    stag = f"{wh}/staging_events"
+    e1 = history(stag)[-1]
+    assert e1["day_col"] == "ts"
+    parts1 = e1["parts"]
+    mtimes = {d: os.path.getmtime(os.path.join(stag, p)) for d, p in parts1.items()}
+
+    ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(src)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_platform_etl(spark, cfg("stage_merge"))
+    r2 = run_platform_etl(spark, cfg())
+    assert r2["rows_ingested"] > 0
+
+    # the staging merge rewrote only batch 2's days: every older day is
+    # the same directory, files untouched, and the new version wrote
+    # only days batch 2 falls on
+    e2 = history(stag)[-1]
+    batch2_days = {
+        str(r[0])
+        for r in ev.filter(F.unix_micros("ts") > cut)
+        .select(F.to_date("ts"))
+        .distinct()
+        .collect()
+    }
+    untouched = [d for d in parts1 if d < min(batch2_days)]
+    assert untouched, "test premise: batch 1 must own some older days"
+    for d in untouched:
+        assert e2["parts"][d] == parts1[d], d
+        assert os.path.getmtime(os.path.join(stag, parts1[d])) == mtimes[d], d
+    written = {d for d, p in e2["parts"].items() if p.startswith(e2["dir"] + "/")}
+    assert written and written <= batch2_days
+
+    # the staged rows are the whole corpus, once each
+    cols = sorted(ev.columns)
+    got = read_version(spark, stag).select(*cols)
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, ev.select(*cols).collect()), key=repr
+    )
 
 
 def test_platform_etl_stream_crash_resume(spark, tmp_path):

@@ -331,6 +331,8 @@ def test_merge_sql_rejects_unsafe_identifiers():
 def test_upsert_partitioned_latest_wins_and_preserves_untouched(spark, tmp_path):
     from dimagi_data_platform_spark.sources.incremental import upsert_partitioned
 
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(mode_key)
     path = str(tmp_path / "upsert_tbl")
     base = spark.createDataFrame(
         [(1, "a", 1, "p1"), (2, "b", 1, "p1"), (3, "c", 1, "p2"), (4, "d", 1, "p3")],
@@ -350,6 +352,8 @@ def test_upsert_partitioned_latest_wins_and_preserves_untouched(spark, tmp_path)
         (5, "e", 2, "p2"),    # inserted
         (4, "d", 1, "p3"),    # untouched partition preserved
     }
+    # the dynamic mode is set per write, never left on the session
+    assert spark.conf.get(mode_key) == session_mode
 
 
 def test_zorder_layout_bounds_both_columns_per_file(spark, tmp_path):

@@ -373,6 +373,37 @@ def test_legacy_entry_without_schema_still_reads(spark, tmp_path):
     assert sorted(map(tuple, V.read_version(spark, p).collect())) == [(1, 1), (2, 2)]
 
 
+def test_commits_leave_no_manifest(spark, tmp_path):
+    """The commit log is the only record a commit writes: writes, merges
+    and a vacuum on a new table leave no ``_manifest.json``. A vacuum of
+    a legacy manifest-only table rewrites its manifest to the kept
+    entries, so a dropped version cannot come back."""
+    import json
+
+    p = str(tmp_path / "tbl")
+    V.write_version(_mk(spark, [(1, 1)], "id long, ver long"), p, "2024-01-01")
+    V.merge_version(
+        spark, p, _mk(spark, [(1, 2)], "id long, ver long"), ["id"], "ver",
+        "2024-01-02",
+    )
+    assert [h["version"] for h in V.history(p)] == [1, 2]
+    assert V.vacuum(p, keep_last=1) == [1]
+    assert not os.path.exists(os.path.join(p, V.MANIFEST))
+    legacy = str(tmp_path / "legacy")
+    entries = []
+    for n in (1, 2):
+        _mk(spark, [(n, n)], "id long, ver long").write.parquet(
+            os.path.join(legacy, f"v={n}")
+        )
+        entries.append({"version": n, "commit_ts": f"2024-01-0{n}", "n_rows": 1})
+    with open(os.path.join(legacy, V.MANIFEST), "w") as f:
+        json.dump({"versions": entries}, f)
+    assert V.vacuum(legacy, keep_last=1) == [1]
+    with open(os.path.join(legacy, V.MANIFEST)) as f:
+        assert [e["version"] for e in json.load(f)["versions"]] == [2]
+    assert [h["version"] for h in V.history(legacy)] == [2]
+
+
 def test_write_version_of_empty_frames_records_zero_rows(spark, tmp_path):
     """The observed row count arrives for an empty frame and for a
     0-partition frame; the write never waits on it forever."""

@@ -11,15 +11,16 @@ bench default):
      merge overhead, which a first run of this probe confirmed:
      half-corpus batch2 = 1.65x a full rebuild);
   2. warehouse A: run(history) then run(+new batch) — the incremental
-     path, timing each run and recording the touched-user fraction;
+     path, timing each run, recording the touched-user fraction and
+     the bytes the new batch added to the warehouse;
   3. warehouse B: one run over everything — the full-rebuild cost a
      naive scheduled job would pay every day;
   4. parity: serve_indicator(A) must equal the registered one-shot
      queries (monthly_usage / user_lifetime / active_users_daily /
      retention_cohorts) over the full events table, value-for-value;
   5. emit ONE JSON artifact: per-run walls, the incremental-vs-rebuild
-     ratio for the new batch, the touched fraction, and the parity
-     verdicts.
+     ratio for the new batch, the batch's bytes written, the touched
+     fraction, and the parity verdicts.
 
 The interesting number is t_batch2 / t_full at the recorded touched
 fraction: per-batch work is proportional to TOUCHED grains' history
@@ -27,31 +28,22 @@ while the rebuild rescans everything (plans/etl.py module docstring),
 so the ratio should sit well under 1 when the touched fraction is
 small — and shrink further as history grows.
 
-r14 findings (ETL_SCALE_PROBE.json): at sf1 the ratio does NOT drop
-below 1 — both layouts land at 1.2-1.8x a full rebuild — for two
-measured reasons that are properties of the PROBE scale, not the
-design: (a) this synthetic corpus has only 15k uniformly-active users,
-so even a 1000-row batch touches ~6% of users and a 10k-row batch
-~49% — the touched-grain scoping has no sparsity to exploit; (b) at
-1M events the per-batch floor is fixed orchestration (7 indicator
-merges + the scoped semi-join scan ≈ a dozen Spark jobs ≈ 10 s),
-which the one-shot rebuild pays only once. The partitioned staging
-layout is measurably cheaper than versioned on the incremental batch
-(14.1 vs 18.1 s at cut 0.999) because it rewrites only touched date
-partitions. Parity is the load-bearing result: BOTH layouts equal the
-one-shot registered queries value-for-value on all four indicator
-families.
+Earlier readings at sf1 put the ratio at 1.2-1.8x a full rebuild, for
+two properties of the PROBE scale, not the design: (a) this synthetic
+corpus has only 15k uniformly-active users, so even a 1000-row batch
+touches ~6% of users and a 10k-row batch ~49% — the touched-grain
+scoping has no sparsity to exploit; (b) at 1M events the per-batch
+floor is fixed orchestration (7 indicator merges + the scoped
+semi-join scan ≈ a dozen Spark jobs), which the one-shot rebuild pays
+only once. At sf10 (10M events, ETL_SCALE_PROBE_SF10.json, measured
+before the staging table was stored by day) the incremental batch
+took 26.0 s against a 29.7 s rebuild. The staging table is stored by
+UTC day of ts, so ``batch2_bytes_written`` is the touched days of
+staging plus the full rewrite of every indicator table.
 
-At sf10 (10M events, ETL_SCALE_PROBE_SF10.json) the crossover
-arrives: incremental batch = 25.0 s (partitioned) / 26.0 s
-(versioned) vs full rebuild 29.7 s — ratio 0.84/0.88 — with parity
-still exact for both layouts. The rebuild scaled 2.6x for 10x data
-while the incremental batch scaled ~1.6x; the remaining per-batch
-growth is the touched-users semi-join's full-table scan, which a
-user-bucketed or date-partition-pruned staged layout removes in a
-real deployment (the indicators read only touched days' + touched
-users' slices).
+Build sf1 first (local, deterministic, no download):
 
+    python tools/make_scaled_sf.py --mult 10 --out .artifacts/sf1
     python tools/etl_scale_probe.py [--sf-dir .artifacts/sf1] \
         [--out ETL_SCALE_PROBE.json]
 """
@@ -68,6 +60,15 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _du(path: str) -> int:
+    """Bytes of every file under ``path``."""
+    return sum(
+        os.path.getsize(os.path.join(r, f))
+        for r, _, fs in os.walk(path)
+        for f in fs
+    )
 
 
 def main() -> None:
@@ -128,30 +129,11 @@ def main() -> None:
     ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(
         src_incr
     )
+    bytes_before = _du(wh_a)
     t0 = time.perf_counter()
     r2 = run_platform_etl(spark, cfg_a)
     t_batch2 = round(time.perf_counter() - t0, 2)
-
-    # the same incremental pair under the P18 partitioned staging
-    # layout (touched-days-only rewrite)
-    src_part = os.path.join(args.work, "src_part")
-    ev.filter(F.unix_micros("ts") <= cut).write.parquet(src_part)
-    wh_p = os.path.join(args.work, "wh_part")
-    cfg_p = PlatformEtlConfig(
-        source_events=src_part,
-        warehouse=wh_p,
-        jdbc_url=None,
-        staging_layout="partitioned",
-    )
-    t0 = time.perf_counter()
-    run_platform_etl(spark, cfg_p)
-    t_batch1_part = round(time.perf_counter() - t0, 2)
-    ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(
-        src_part
-    )
-    t0 = time.perf_counter()
-    run_platform_etl(spark, cfg_p)
-    t_batch2_part = round(time.perf_counter() - t0, 2)
+    batch2_bytes = _du(wh_a) - bytes_before
 
     src_full = os.path.join(args.work, "src_full")
     ev.write.parquet(src_full)
@@ -175,14 +157,11 @@ def main() -> None:
         want = QUERIES[qname](spark, args.sf_dir)
         cols = sorted(want.columns)
         w = sorted(map(tuple, want.select(*cols).collect()), key=repr)
-        for wh, tag in ((wh_a, "versioned"), (wh_p, "partitioned")):
-            got = serve_indicator(spark, wh, name)
-            g = sorted(map(tuple, got.select(*cols).collect()), key=repr)
-            parity[f"{name}:{tag}"] = (
-                "ok"
-                if g == w
-                else f"MISMATCH ({len(g)} vs {len(w)} rows)"
-            )
+        got = serve_indicator(spark, wh_a, name)
+        g = sorted(map(tuple, got.select(*cols).collect()), key=repr)
+        parity[name] = (
+            "ok" if g == w else f"MISMATCH ({len(g)} vs {len(w)} rows)"
+        )
 
     out = {
         "sf_dir": args.sf_dir,
@@ -195,13 +174,9 @@ def main() -> None:
         "rows_batch2": int(r2["rows_ingested"]),
         "t_batch1_sec": t_batch1,
         "t_batch2_sec": t_batch2,
-        "t_batch1_partitioned_sec": t_batch1_part,
-        "t_batch2_partitioned_sec": t_batch2_part,
+        "batch2_bytes_written": int(batch2_bytes),
         "t_full_rebuild_sec": t_full,
         "incr_vs_rebuild": round(t_batch2 / t_full, 3) if t_full else None,
-        "incr_vs_rebuild_partitioned": (
-            round(t_batch2_part / t_full, 3) if t_full else None
-        ),
         "parity_incremental_vs_one_shot": parity,
     }
     with open(args.out, "w") as f:
