@@ -37,11 +37,22 @@ Scale posture: per-batch work is proportional to the TOUCHED grains'
 history, not the corpus —
 
   - user-grain indicators (P1/P2/P3/P5b) recompute only for users
-    present in the incoming batch (one semi-join against the staged
-    table; session boundaries and monthly aggregates of untouched
-    users cannot change);
-  - the day-grain DAU table (P4) recomputes only the batch's days
-    (day-scoped semi-join of the staged table); the lag-based
+    present in the incoming batch (an ``IN`` filter of the staged
+    table on the touched user ids; session boundaries and monthly
+    aggregates of untouched users cannot change). The bootstrap (no
+    watermark yet) touches every user and filters nothing;
+  - P2 ``visits`` is stored by UTC day of ``session_end`` and merges
+    only the touched users' sessions that end at or after the batch's
+    earliest UTC day start: every event a batch can change is at or
+    after it, so an earlier session keeps its events, its ordinal
+    ``session_id`` and its stats. A stored session of a touched user
+    that ends there and that the recompute no longer produces (a
+    resubmission joined it to another) is merged as an
+    ``n_events = 0`` tombstone (``serve_indicator`` filters them);
+    the merge rewrites only those sessions' days;
+  - the day-grain DAU table (P4) recomputes only the batch's days (a
+    ``ts`` range filter, which skips the other days' files by their
+    parquet min/max stats, plus the exact day test); the lag-based
     ``dau_delta`` additionally rewrites each touched day's NEXT
     existing day, with untouched days' counts read from the small
     existing indicator table rather than rescanned;
@@ -58,17 +69,24 @@ history, not the corpus —
     event rescan (churned is monotone: the horizon only advances).
 
 The versioned MERGE + JDBC MERGE then update only those grains. The
-staging table is created day-partitioned on ``ts``
-(``sources/versioned.py``), so its merge rewrites only the UTC days
-the batch touches, plus any day that already holds one of the batch's
-event ids (one key probe of the staged table); every other day's file
-is shared with the previous version. The indicator tables still
-rewrite in full. Below the row work sits a fixed per-batch job floor
-(about 50 Spark jobs: one write job per versioned commit, plus the
-staging key probe, the eager checkpoints, the touched-grain joins and
-the publish); versioned commits add no read-back count or
-schema-inference jobs to it. A staging table created unpartitioned
-(before this layout) keeps merging in full.
+staging table is created day-partitioned on ``ts`` and ``visits`` on
+``session_end`` (``sources/versioned.py``), so their merges rewrite
+only the UTC days the updates fall on, plus any day that already holds
+one of their keys (one key probe of the stored table); every other
+day's file is shared with the previous version. The other indicator
+tables still rewrite in full. Below the row work sits a fixed
+per-batch job floor (about 50 Spark jobs: one write job per versioned
+commit, plus the two key probes, the eager checkpoints, the
+touched-grain joins and the publish); the batch's count, watermark,
+commit stamp, touched user ids and days come from one observation on
+its checkpoint, and the touched-grain filters are ``IN`` lists rather
+than broadcast joins, so neither costs a job of its own. Tables
+created unpartitioned (before this layout) keep rewriting in full.
+
+NULL user ids: the scoped filters never match a NULL ``user_id`` (as
+the semi joins they replace never did), so a NULL-user event reaches
+the user-grain indicators only through the bootstrap; the churn flip
+keeps stored NULL-user rows, as the anti join it replaces did.
 
 Resubmission contract (matches the reference's form-resubmission
 semantics): a resubmitted event (same event_id, later ts) may change
@@ -83,7 +101,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dimagi_data_platform_spark.functions.num import dsum
@@ -210,11 +228,25 @@ def _user_first_day(ev: DataFrame) -> DataFrame:
     )
 
 
-_INDICATORS = {
-    "latest_event": _latest_event,
-    "visits": _visits,
-    "monthly_usage": _monthly_usage,
-}
+_DAY_US = 86_400_000_000
+#: an event's UTC day start in epoch microseconds (the session time
+#: zone is pinned to UTC)
+_DAY_US_SQL = "unix_micros(date_trunc('day', ts))"
+#: touched-user lists longer than this scope by a join with the batch
+#: instead: every plan that carries an IN list analyzes all its values
+#: again, which cost the sf1 probe's 7k-user batch about 1 s
+_IN_LIST_MAX = 1000
+
+
+def _isin(sql: str, values: list) -> Column:
+    """``<sql> IN (values)`` for integer values, as ONE SQL expression:
+    ``Column.isin`` sends each value to the JVM in its own py4j call,
+    about 0.13 ms a value (0.9 s for 7k user ids). NULL never matches,
+    as in the semi join this replaces."""
+    if not values:
+        return F.lit(False)
+    return F.expr(f"{sql} IN ({', '.join(str(int(v)) for v in values)})")
+
 
 #: every versioned table the pipeline maintains, in build order —
 #: the convergence test diffs all of them
@@ -229,14 +261,19 @@ INDICATOR_TABLES = (
 )
 
 
+#: tables whose batches store tombstones (the versioned MERGE has no
+#: delete clause), and the count column that is 0 on one: retention
+#: cells a recompute emptied, and sessions a resubmission joined into
+#: another
+_TOMBSTONE_COUNT = {"retention_cohorts": "n_users", "visits": "n_events"}
+
+
 def serve_indicator(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
     """Read an indicator table for serving: drops the internal
-    watermark stamp and filters retention tombstones (cells whose
-    recompute emptied them are stored as ``n_users = 0`` because the
-    versioned MERGE has no delete clause)."""
+    watermark stamp and filters tombstones (``_TOMBSTONE_COUNT``)."""
     df = read_version(spark, f"{warehouse}/{name}").drop("_etl_wm")
-    if name == "retention_cohorts":
-        df = df.filter(F.col("n_users") > 0)
+    if name in _TOMBSTONE_COUNT:
+        df = df.filter(F.col(_TOMBSTONE_COUNT[name]) > 0)
     return df
 
 
@@ -378,16 +415,25 @@ def _run_batch(
     the horizon backwards."""
     store = WatermarkStore(f"{cfg.warehouse}/watermark.json")
     wm_before = store.get(cfg.watermark_name)
-    # the batch drives several stages — pin it once, then ONE driver
-    # action for count + watermark + commit stamp (three separate
-    # collects were three jobs of the per-batch floor)
-    batch = pin(batch)
-    stats = batch.agg(
+    # the bootstrap (no watermark yet, also when it is replayed after a
+    # crash) touches every user, so it skips the user scoping
+    bootstrap = wm_before is None
+    # the batch drives several stages: pin it once, and take everything
+    # the chain needs to know about it from an observation on that one
+    # job (a collect after the pin cost two more)
+    obs = Observation()
+    metrics = [
         F.count(F.lit(1)).alias("n"),
-        F.max(F.unix_micros(F.col("ts"))).alias("wm"),
+        F.count("ts").alias("n_ts"),
+        F.max(F.unix_micros("ts")).alias("wm"),
         F.max("ts").cast("string").alias("m"),
-    ).collect()[0]
-    n_batch = int(stats.n)
+        F.collect_set(F.expr(_DAY_US_SQL)).alias("days"),
+    ]
+    if not bootstrap:
+        metrics.append(F.collect_set("user_id").alias("users"))
+    batch = pin(batch.observe(obs, *metrics))
+    stats = obs.get
+    n_batch = int(stats["n"])
     report = {
         "watermark_before": wm_before,
         "rows_ingested": n_batch,
@@ -396,8 +442,15 @@ def _run_batch(
     if n_batch == 0:
         report["no_op"] = True
         return report
-    new_wm = max(int(stats.wm), int(wm_before or 0))
-    commit_ts = stats.m
+    new_wm = max(int(stats["wm"]), int(wm_before or 0))
+    commit_ts = stats["m"]
+    # touched user ids (None: every user) and the batch's UTC day starts
+    users = None if bootstrap else stats["users"]
+    days = sorted(stats["days"])
+    # every event this batch can change lies at or after its earliest
+    # day start (a resubmission keeps its day); a NULL ts sorts first in
+    # every user's sessions, so it gives no such bound
+    cut = days[0] if days and stats["n_ts"] == n_batch else None
     _maybe_fail(cfg, "ingest")
 
     # staging MERGE: latest-wins resubmission dedup on event_id; the
@@ -411,20 +464,35 @@ def _run_batch(
     report["stages"].append(("stage_merge", v))
     _maybe_fail(cfg, "stage_merge")
 
+    def touched(df: DataFrame, anti: bool = False) -> DataFrame:
+        """``df``'s rows of the touched users (``anti``: the other rows).
+        A NULL user_id is never touched, as in a semi or anti join; an
+        IN list needs no broadcast job, a long one scopes by a join."""
+        if len(users) > _IN_LIST_MAX:
+            how = "anti" if anti else "semi"
+            return df.join(F.broadcast(batch.select("user_id")), "user_id", how)
+        hit = _isin("user_id", users)
+        return df.filter((F.col("user_id").isNull() | ~hit) if anti else hit)
+
     # indicators recompute ONLY the touched users' grains, from the
     # full staged history of those users
-    users = batch.select("user_id").distinct()
     staged = read_version(spark, staging_path)
-    scoped = pin(staged.join(F.broadcast(users), "user_id", "semi"))
+    scoped = pin(staged if users is None else touched(staged))
     wm_stamp = F.lit(int(new_wm)).cast("long").alias("_etl_wm")
     updates: dict[str, DataFrame] = {}
 
-    def _apply(name: str, rows: DataFrame) -> None:
+    def _apply(
+        name: str,
+        rows: DataFrame,
+        day_partition: str | None = None,
+        pin_rows: bool = False,
+    ) -> None:
         rows = rows.withColumn("_etl_wm", wm_stamp)
-        # pin only what the publish stage will re-read — an extra
-        # checkpoint per indicator is one wasted eager job each
-        # (measured ~0.5-1.5 s of the per-batch floor at sf1)
-        if cfg.jdbc_url and name in cfg.publish:
+        # pin only what is read more than once (the publish stage's
+        # re-read, or a merge's key probe): an extra checkpoint per
+        # indicator is one wasted eager job each (measured ~0.5-1.5 s
+        # of the per-batch floor at sf1)
+        if pin_rows or (cfg.jdbc_url and name in cfg.publish):
             rows = pin(rows)
         updates[name] = rows
         iv = _merge_or_init(
@@ -434,19 +502,65 @@ def _run_batch(
             _INDICATOR_KEYS[name],
             "_etl_wm",
             commit_ts,
+            day_partition=day_partition,
         )
         report["stages"].append((f"indicator:{name}", iv))
 
-    for name, fn in _INDICATORS.items():
-        _apply(name, fn(scoped))
+    _apply("latest_event", _latest_event(scoped))
+
+    # P2 visits, stored by UTC day of session_end. A session that ends
+    # before ``cut`` keeps its ordinal session_id (every earlier event is
+    # unchanged) and either keeps its events or gains one at or after
+    # ``cut``, which moves its end there: so only the sessions that end
+    # at or after ``cut`` are merged, and the merge rewrites only their
+    # days. Such a stored session of a touched user that the recompute
+    # no longer produces (a resubmission joined it to another) becomes
+    # an n_events = 0 tombstone.
+    vis_path = f"{cfg.warehouse}/visits"
+    vis_rows = _visits(scoped)
+    vis_stored = bool(history(vis_path))
+    if vis_stored:
+        keys = _INDICATOR_KEYS["visits"]
+        old = (
+            read_version(spark, vis_path)
+            .drop("_etl_wm")
+            .filter(F.col("n_events") > 0)
+        )
+        if users is not None:
+            old = touched(old)
+        if cut is not None:
+            since = F.timestamp_micros(F.lit(cut))
+            vis_rows = vis_rows.filter(F.col("session_end") >= since)
+            old = old.filter(F.col("session_end") >= since)
+        # per key, a recomputed session wins over the stored one, which
+        # otherwise stays as a tombstone (one pass over the recompute;
+        # an anti join against it would run the sessionization twice)
+        gone = old.select(*vis_rows.columns).withColumn(
+            "n_events", F.lit(0).cast("long")
+        )
+        vis_rows = (
+            vis_rows.withColumn("__new", F.lit(True))
+            .unionByName(gone.withColumn("__new", F.lit(False)))
+            .withColumn(
+                "__rn",
+                F.row_number().over(
+                    Window.partitionBy(*keys).orderBy(F.desc("__new"))
+                ),
+            )
+            .filter(F.col("__rn") == 1)
+            .drop("__new", "__rn")
+        )
+    _apply("visits", vis_rows, day_partition="session_end", pin_rows=vis_stored)
+
+    _apply("monthly_usage", _monthly_usage(scoped))
 
     # P5b user lifetime: touched users recomputed against the new
     # horizon + the stored rows whose idle gap just crossed 7 days
     # (churned is monotone under an advancing horizon)
     life_path = f"{cfg.warehouse}/user_lifetime"
     life_rows = _user_lifetime(scoped, int(new_wm))
-    if history(life_path):
-        flipped = (
+    if users is not None and history(life_path):
+        stored = (
             read_version(spark, life_path)
             .drop("_etl_wm")
             .filter(~F.col("churned"))
@@ -454,9 +568,8 @@ def _run_batch(
                 F.lit(int(new_wm)) - F.unix_micros("last_ts")
                 > F.lit(7 * 86_400_000_000)
             )
-            .join(F.broadcast(users), "user_id", "anti")
-            .withColumn("churned", F.lit(True))
         )
+        flipped = touched(stored, anti=True).withColumn("churned", F.lit(True))
         life_rows = life_rows.unionByName(flipped.select(*life_rows.columns))
     _apply("user_lifetime", life_rows)
 
@@ -464,12 +577,10 @@ def _run_batch(
     # cohorts before the merge rewrites them
     ufd_path = f"{cfg.warehouse}/user_first_day"
     if history(ufd_path):
-        old_cohorts = (
-            read_version(spark, ufd_path)
-            .join(F.broadcast(users), "user_id", "semi")
-            .select("cohort_day")
-            .distinct()
-        )
+        old_cohorts = read_version(spark, ufd_path)
+        if users is not None:
+            old_cohorts = touched(old_cohorts)
+        old_cohorts = old_cohorts.select("cohort_day").distinct()
     else:
         old_cohorts = None
     new_first = _user_first_day(scoped)
@@ -479,17 +590,17 @@ def _run_batch(
     # the lag-based delta also rewrites each touched day's next
     # existing day, with untouched days' counts read from the existing
     # (small) indicator table
-    from pyspark.sql import Window
-
     dau_path = f"{cfg.warehouse}/active_users_daily"
-    batch_days = batch.select(
-        F.date_trunc("day", "ts").alias("day")
-    ).distinct()
-    day_scoped = staged.join(
-        F.broadcast(batch_days),
-        F.date_trunc("day", staged["ts"]) == batch_days["day"],
-        "semi",
-    )
+    in_days = _isin(_DAY_US_SQL, days)
+    if days:
+        # the range lets the scan skip every other day's file by its
+        # parquet min/max stats; the day test keeps only the batch's days
+        in_days = (
+            (F.col("ts") >= F.timestamp_micros(F.lit(days[0])))
+            & (F.col("ts") < F.timestamp_micros(F.lit(days[-1] + _DAY_US)))
+            & in_days
+        )
+    day_scoped = staged.filter(in_days)
     new_days = day_scoped.groupBy(
         F.date_trunc("day", "ts").alias("day")
     ).agg(
@@ -501,7 +612,7 @@ def _run_batch(
         untouched = (
             read_version(spark, dau_path)
             .select("day", "dau", "total_value")
-            .join(F.broadcast(batch_days), "day", "anti")
+            .filter(F.col("day").isNull() | ~_isin("unix_micros(day)", days))
             .withColumn("_touched", F.lit(False))
         )
         spine = spine.unionByName(untouched)

@@ -14,7 +14,10 @@ bench default):
      path, timing each run, recording the touched-user fraction and
      the bytes the new batch added to the warehouse;
   3. warehouse B: one run over everything — the full-rebuild cost a
-     naive scheduled job would pay every day;
+     naive scheduled job would pay every day; steps 2 and 3 run twice,
+     and only the second pass is timed, so every timed run finds the
+     JVM equally warm (timed cold, the same rebuild took 3.94 s as a
+     fifth run and 6.11 s as a third);
   4. parity: serve_indicator(A) must equal the registered one-shot
      queries (monthly_usage / user_lifetime / active_users_daily /
      retention_cohorts) over the full events table, value-for-value;
@@ -38,8 +41,9 @@ semi-join scan ≈ a dozen Spark jobs), which the one-shot rebuild pays
 only once. At sf10 (10M events, ETL_SCALE_PROBE_SF10.json, measured
 before the staging table was stored by day) the incremental batch
 took 26.0 s against a 29.7 s rebuild. The staging table is stored by
-UTC day of ts, so ``batch2_bytes_written`` is the touched days of
-staging plus the full rewrite of every indicator table.
+UTC day of ts and ``visits`` by UTC day of session_end, so
+``batch2_bytes_written`` is the touched days of those two plus the full
+rewrite of every other indicator table.
 
 Build sf1 first (local, deterministic, no download):
 
@@ -116,36 +120,47 @@ def main() -> None:
         .count()
     )
 
-    src_incr = os.path.join(args.work, "src_incr")
-    ev.filter(F.unix_micros("ts") <= cut).write.parquet(src_incr)
-    wh_a = os.path.join(args.work, "wh_incr")
-    cfg_a = PlatformEtlConfig(
-        source_events=src_incr, warehouse=wh_a, jdbc_url=None
-    )
-
-    t0 = time.perf_counter()
-    r1 = run_platform_etl(spark, cfg_a)
-    t_batch1 = round(time.perf_counter() - t0, 2)
-    ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(
-        src_incr
-    )
-    bytes_before = _du(wh_a)
-    t0 = time.perf_counter()
-    r2 = run_platform_etl(spark, cfg_a)
-    t_batch2 = round(time.perf_counter() - t0, 2)
-    batch2_bytes = _du(wh_a) - bytes_before
-
     src_full = os.path.join(args.work, "src_full")
     ev.write.parquet(src_full)
-    wh_b = os.path.join(args.work, "wh_full")
-    t0 = time.perf_counter()
-    run_platform_etl(
-        spark,
-        PlatformEtlConfig(
-            source_events=src_full, warehouse=wh_b, jdbc_url=None
-        ),
-    )
-    t_full = round(time.perf_counter() - t0, 2)
+
+    def timed_runs(tag: str) -> dict:
+        """Warehouse A: run(history), then run(+ new batch); warehouse
+        B: one run over everything. Returns walls, reports, bytes."""
+        src_incr = os.path.join(args.work, f"src_incr_{tag}")
+        ev.filter(F.unix_micros("ts") <= cut).write.parquet(src_incr)
+        wh_a = os.path.join(args.work, f"wh_incr_{tag}")
+        cfg_a = PlatformEtlConfig(
+            source_events=src_incr, warehouse=wh_a, jdbc_url=None
+        )
+        out = {"wh_incr": wh_a}
+        t0 = time.perf_counter()
+        out["r1"] = run_platform_etl(spark, cfg_a)
+        out["t_batch1"] = round(time.perf_counter() - t0, 2)
+        ev.filter(F.unix_micros("ts") > cut).write.mode("append").parquet(
+            src_incr
+        )
+        bytes_before = _du(wh_a)
+        t0 = time.perf_counter()
+        out["r2"] = run_platform_etl(spark, cfg_a)
+        out["t_batch2"] = round(time.perf_counter() - t0, 2)
+        out["batch2_bytes"] = _du(wh_a) - bytes_before
+        t0 = time.perf_counter()
+        run_platform_etl(
+            spark,
+            PlatformEtlConfig(
+                source_events=src_full,
+                warehouse=os.path.join(args.work, f"wh_full_{tag}"),
+                jdbc_url=None,
+            ),
+        )
+        out["t_full"] = round(time.perf_counter() - t0, 2)
+        return out
+
+    # an untimed pass of the same runs first: otherwise the rebuild,
+    # timed last, runs on a JVM the earlier runs warmed, and the ratio
+    # moves with run order rather than with the code
+    timed_runs("warm")
+    runs = timed_runs("timed")
 
     parity: dict[str, str] = {}
     for name, qname in (
@@ -157,7 +172,7 @@ def main() -> None:
         want = QUERIES[qname](spark, args.sf_dir)
         cols = sorted(want.columns)
         w = sorted(map(tuple, want.select(*cols).collect()), key=repr)
-        got = serve_indicator(spark, wh_a, name)
+        got = serve_indicator(spark, runs["wh_incr"], name)
         g = sorted(map(tuple, got.select(*cols).collect()), key=repr)
         parity[name] = (
             "ok" if g == w else f"MISMATCH ({len(g)} vs {len(w)} rows)"
@@ -170,13 +185,15 @@ def main() -> None:
         "n_users_total": int(n_users_total),
         "n_users_touched_batch2": int(n_users_touched),
         "touched_user_fraction": round(n_users_touched / n_users_total, 4),
-        "rows_batch1": int(r1["rows_ingested"]),
-        "rows_batch2": int(r2["rows_ingested"]),
-        "t_batch1_sec": t_batch1,
-        "t_batch2_sec": t_batch2,
-        "batch2_bytes_written": int(batch2_bytes),
-        "t_full_rebuild_sec": t_full,
-        "incr_vs_rebuild": round(t_batch2 / t_full, 3) if t_full else None,
+        "rows_batch1": int(runs["r1"]["rows_ingested"]),
+        "rows_batch2": int(runs["r2"]["rows_ingested"]),
+        "t_batch1_sec": runs["t_batch1"],
+        "t_batch2_sec": runs["t_batch2"],
+        "batch2_bytes_written": int(runs["batch2_bytes"]),
+        "t_full_rebuild_sec": runs["t_full"],
+        "incr_vs_rebuild": (
+            round(runs["t_batch2"] / runs["t_full"], 3) if runs["t_full"] else None
+        ),
         "parity_incremental_vs_one_shot": parity,
     }
     with open(args.out, "w") as f:
