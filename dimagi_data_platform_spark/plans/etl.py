@@ -40,7 +40,7 @@ history, not the corpus —
     present in the incoming batch (an ``IN`` filter of the staged
     table on the touched user ids; session boundaries and monthly
     aggregates of untouched users cannot change). The bootstrap (no
-    watermark yet) touches every user and filters nothing;
+    watermark yet) touches every user, so it builds no ``IN`` list;
   - P2 ``visits`` is stored by UTC day of ``session_end`` and merges
     only the touched users' sessions that end at or after the batch's
     earliest UTC day start: every event a batch can change is at or
@@ -83,17 +83,22 @@ its checkpoint, and the touched-grain filters are ``IN`` lists rather
 than broadcast joins, so neither costs a job of its own. Tables
 created unpartitioned (before this layout) keep rewriting in full.
 
-NULL user ids: the scoped filters never match a NULL ``user_id`` (as
-the semi joins they replace never did), so a NULL-user event reaches
-the user-grain indicators only through the bootstrap; the churn flip
-keeps stored NULL-user rows, as the anti join it replaces did.
+NULL user ids: an event with a NULL ``user_id`` feeds no user-grain
+indicator (P1/P2/P3/P5/P5b) in any batch, the bootstrap included: the
+scoped filters never match it (as the semi joins they replace never
+did), and the bootstrap drops it. So the served tables do not depend
+on which batch such an event arrives in. It still counts in the
+day-grain DAU ``total_value``, which is not scoped by user.
 
 Resubmission contract (matches the reference's form-resubmission
 semantics): a resubmitted event (same event_id, later ts) may change
 its payload but keeps its user_id and day — the touched-grain scoping
 above keys off the incoming batch's users/days, so a resubmission
 that silently MOVED an event across users or days would leave the
-abandoned grain stale until its next organic touch.
+abandoned grain stale: a user grain until that user's next batch, a
+DAU day until a batch has events on that day again, and a ``visits``
+session on an earlier day for good (a later batch's cut lies after
+it, so no batch merges it again).
 """
 
 from __future__ import annotations
@@ -232,10 +237,14 @@ _DAY_US = 86_400_000_000
 #: an event's UTC day start in epoch microseconds (the session time
 #: zone is pinned to UTC)
 _DAY_US_SQL = "unix_micros(date_trunc('day', ts))"
-#: touched-user lists longer than this scope by a join with the batch
-#: instead: every plan that carries an IN list analyzes all its values
-#: again, which cost the sf1 probe's 7k-user batch about 1 s
-_IN_LIST_MAX = 1000
+#: touched-user lists longer than this scope by a broadcast join with
+#: the batch instead. A batch on sf1 (1M events, 4 cores) timed alike
+#: either way up to ~800 touched users (medians of 9 runs within
+#: 0.07 s), and slower with the IN lists from ~1k users on (+0.3 s at
+#: 1k and 1.9k, +0.7 s at 4.2k, +1.0 s at 5.6k): every plan carrying
+#: the list handles all its values again. Below this the lists save
+#: the joins' broadcast jobs
+_IN_LIST_MAX = 500
 
 
 def _isin(sql: str, values: list) -> Column:
@@ -477,7 +486,13 @@ def _run_batch(
     # indicators recompute ONLY the touched users' grains, from the
     # full staged history of those users
     staged = read_version(spark, staging_path)
-    scoped = pin(staged if users is None else touched(staged))
+    # the bootstrap scopes no users, but leaves NULL user ids out as
+    # every later batch's filters do
+    scoped = pin(
+        staged.filter(F.col("user_id").isNotNull())
+        if users is None
+        else touched(staged)
+    )
     wm_stamp = F.lit(int(new_wm)).cast("long").alias("_etl_wm")
     updates: dict[str, DataFrame] = {}
 

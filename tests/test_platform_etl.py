@@ -369,11 +369,12 @@ def test_platform_etl_visits_follow_resubmissions(spark, tmp_path, monkeypatch):
     leaves no stale session behind (the merge stores a tombstone, which
     serving drops), every served indicator equals the one-shot query
     over the latest-wins view after each batch, and each batch's
-    ``visits`` version reuses every other day's directory by path. A
-    NULL-user event (reached only by the bootstrap, which scopes no
-    users) must still flip to churned as the horizon passes it. The
-    first batch touches more users than the IN-list limit, so it scopes
-    by joins; the others by IN lists."""
+    ``visits`` version reuses every other day's directory by path.
+    NULL-user events, in the bootstrap and in a steady batch, feed no
+    user-grain indicator in either (the one-shot queries run over the
+    view without them) and still count in DAU. The first batch touches
+    more users than the IN-list limit, so it scopes by joins; the
+    others by IN lists."""
     import pyarrow.parquet as pq
 
     from dimagi_data_platform_spark.plans import etl
@@ -387,7 +388,6 @@ def test_platform_etl_visits_follow_resubmissions(spark, tmp_path, monkeypatch):
         (1, "2024-01-02 09:00", 1, 1.0),
         (2, "2024-01-03 09:00", 1, 2.0),
         (3, "2024-01-02 10:00", 2, 3.0),
-        # idle past 7 days from the second batch's horizon on
         (4, "2024-01-05 09:00", None, 4.0),
         (5, "2024-01-08 10:00", 2, 5.0),
         (6, "2024-01-11 23:45", 2, 6.0),
@@ -403,7 +403,11 @@ def test_platform_etl_visits_follow_resubmissions(spark, tmp_path, monkeypatch):
         # event 8 is resubmitted later the same day: user 1's two
         # sessions of day 12 become one
         [(8, "2024-01-12 09:10", 1, 8.5), (11, "2024-01-12 09:20", 3, 11.0)],
-        [(12, "2024-01-12 10:00", 3, 12.0), (13, "2024-01-12 10:30", 2, 13.0)],
+        [
+            (12, "2024-01-12 10:00", 3, 12.0),
+            (13, "2024-01-12 10:30", 2, 13.0),
+            (14, "2024-01-12 09:40", None, 14.0),
+        ],
     ]
     monkeypatch.setattr(etl, "_IN_LIST_MAX", 2)
     src = tmp_path / "src"
@@ -426,21 +430,25 @@ def test_platform_etl_visits_follow_resubmissions(spark, tmp_path, monkeypatch):
         before = history(vis)[-1]
         assert run_platform_etl(spark, cfg)["rows_ingested"] == len(rows)
 
-        view = tmp_path / f"view{i}"
-        view.mkdir()
-        pq.write_table(
-            _feed_rows(sorted(latest.values())), str(view / "events.parquet")
-        )
-        for name, qname in (
-            ("visits", "visits_sessionize"),
-            ("latest_event", "latest_event_per_user"),
-            ("monthly_usage", "monthly_usage"),
-            ("user_lifetime", "user_lifetime"),
-            ("active_users_daily", "active_users_daily"),
-            ("retention_cohorts", "retention_cohorts"),
+        # the latest-wins view, and the same without NULL-user events
+        views = {}
+        for tag, keep in (("all", None), ("users", lambda r: r[2] is not None)):
+            views[tag] = tmp_path / f"view{i}_{tag}"
+            views[tag].mkdir()
+            pq.write_table(
+                _feed_rows(sorted(filter(keep, latest.values()))),
+                str(views[tag] / "events.parquet"),
+            )
+        for name, qname, tag in (
+            ("visits", "visits_sessionize", "users"),
+            ("latest_event", "latest_event_per_user", "users"),
+            ("monthly_usage", "monthly_usage", "users"),
+            ("user_lifetime", "user_lifetime", "users"),
+            ("active_users_daily", "active_users_daily", "all"),
+            ("retention_cohorts", "retention_cohorts", "users"),
         ):
             got = etl.serve_indicator(spark, wh, name)
-            want = QUERIES[qname](spark, str(view))
+            want = QUERIES[qname](spark, str(views[tag]))
             cols = sorted(want.columns)
             assert sorted(
                 map(tuple, got.select(*cols).collect()), key=repr

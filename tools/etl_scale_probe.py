@@ -14,16 +14,18 @@ bench default):
      path, timing each run, recording the touched-user fraction and
      the bytes the new batch added to the warehouse;
   3. warehouse B: one run over everything — the full-rebuild cost a
-     naive scheduled job would pay every day; steps 2 and 3 run twice,
-     and only the second pass is timed, so every timed run finds the
-     JVM equally warm (timed cold, the same rebuild took 3.94 s as a
-     fifth run and 6.11 s as a third);
+     naive scheduled job would pay every day; steps 2 and 3 run once
+     untimed, so no timed run finds a cold JVM (timed cold, the same
+     rebuild took 3.94 s as a fifth run and 6.11 s as a third), then
+     --repeats times (default 3) timed, and the artifact records each
+     timing's median (one pass's ratio ranged 1.155-1.811 over four
+     runs of one tree on a 4-core host);
   4. parity: serve_indicator(A) must equal the registered one-shot
      queries (monthly_usage / user_lifetime / active_users_daily /
      retention_cohorts) over the full events table, value-for-value;
   5. emit ONE JSON artifact: per-run walls, the incremental-vs-rebuild
-     ratio for the new batch, the batch's bytes written, the touched
-     fraction, and the parity verdicts.
+     ratio for the new batch (median, and every pass's), the batch's
+     bytes written, the touched fraction, and the parity verdicts.
 
 The interesting number is t_batch2 / t_full at the recorded touched
 fraction: per-batch work is proportional to TOUCHED grains' history
@@ -58,6 +60,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -87,6 +90,7 @@ def main() -> None:
         "--work", default=os.path.join(REPO, ".artifacts", "etl_probe")
     )
     ap.add_argument("--cut-quantile", type=float, default=0.99)
+    ap.add_argument("--repeats", type=int, default=3)
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -156,11 +160,29 @@ def main() -> None:
         out["t_full"] = round(time.perf_counter() - t0, 2)
         return out
 
+    def drop(tag: str) -> None:
+        for d in ("src_incr", "wh_incr", "wh_full"):
+            shutil.rmtree(os.path.join(args.work, f"{d}_{tag}"), ignore_errors=True)
+
     # an untimed pass of the same runs first: otherwise the rebuild,
     # timed last, runs on a JVM the earlier runs warmed, and the ratio
     # moves with run order rather than with the code
     timed_runs("warm")
-    runs = timed_runs("timed")
+    drop("warm")
+    passes = []
+    for i in range(args.repeats):
+        if passes:
+            drop(f"timed{i - 1}")
+        passes.append(timed_runs(f"timed{i}"))
+    runs = passes[-1]
+
+    def median(key: str) -> float:
+        return statistics.median(p[key] for p in passes)
+
+    ratios = [
+        round(p["t_batch2"] / p["t_full"], 3) if p["t_full"] else None
+        for p in passes
+    ]
 
     parity: dict[str, str] = {}
     for name, qname in (
@@ -179,7 +201,7 @@ def main() -> None:
         )
 
     out = {
-        "sf_dir": args.sf_dir,
+        "sf_dir": os.path.relpath(args.sf_dir, REPO),
         "n_events": int(n_events),
         "cut_quantile": args.cut_quantile,
         "n_users_total": int(n_users_total),
@@ -187,13 +209,15 @@ def main() -> None:
         "touched_user_fraction": round(n_users_touched / n_users_total, 4),
         "rows_batch1": int(runs["r1"]["rows_ingested"]),
         "rows_batch2": int(runs["r2"]["rows_ingested"]),
-        "t_batch1_sec": runs["t_batch1"],
-        "t_batch2_sec": runs["t_batch2"],
+        "repeats": args.repeats,
+        "t_batch1_sec": median("t_batch1"),
+        "t_batch2_sec": median("t_batch2"),
         "batch2_bytes_written": int(runs["batch2_bytes"]),
-        "t_full_rebuild_sec": runs["t_full"],
+        "t_full_rebuild_sec": median("t_full"),
         "incr_vs_rebuild": (
-            round(runs["t_batch2"] / runs["t_full"], 3) if runs["t_full"] else None
+            statistics.median(ratios) if None not in ratios else None
         ),
+        "incr_vs_rebuild_runs": ratios,
         "parity_incremental_vs_one_shot": parity,
     }
     with open(args.out, "w") as f:
