@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dimagi_data_platform_spark.operators.loop import row_count
+
 
 def frozen_range_pid(
     df: DataFrame,
@@ -83,7 +85,9 @@ def frozen_range_pid(
             df = df.localCheckpoint()
         n_target = sample_n or max(npart * 20, 200)
         proj = df.select(*order_cols)
-        cnt = proj.count()
+        # a checkpoint's projection has no shuffle, so it counts in one
+        # job; an unmaterialized input may, and keeps ``count()``
+        cnt = row_count(proj) if materialize else proj.count()
         if cnt == 0:
             sample = []
         elif cnt <= 4 * n_target:

@@ -82,6 +82,12 @@ commit stamp, touched user ids and days come from one observation on
 its checkpoint, and the touched-grain filters are ``IN`` lists rather
 than broadcast joins, so neither costs a job of its own. Tables
 created unpartitioned (before this layout) keep rewriting in full.
+Every commit is written as zstd parquet with v2 pages (the storage
+format in ``sources/versioned.py``), which about halves the staged
+events and cuts ``visits`` by a quarter against snappy v1 pages; on
+the 1M-event probe (``tools/etl_scale_probe.py``) the warehouse went
+from 1.47 to 0.88 times its source's bytes, and the second batch
+wrote 0.41 MB instead of 1.03 MB.
 
 NULL user ids: an event with a NULL ``user_id`` feeds no user-grain
 indicator (P1/P2/P3/P5/P5b) in any batch, the bootstrap included: the

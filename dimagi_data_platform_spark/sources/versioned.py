@@ -64,6 +64,21 @@ point into it by path), and ``vacuum`` deletes a day directory only when
 no kept version lists it. ``merge_version_dv`` refuses such a table:
 its scoped copy-on-write already writes only the touched days.
 
+**Storage format.** Every commit writes zstd-compressed parquet with v2
+data pages (``_PARQUET_OPTIONS``, applied by the two writers every
+commit path goes through). With v1 pages, a long column that falls back
+from dictionary encoding is stored PLAIN; v2 pages store it
+``DELTA_BINARY_PACKED``, which suits the sorted ``event_id`` / ``ts``
+and per-user ``session_id`` columns. Each parquet file records its own
+codec and encodings, so a table holds files of both formats: day
+directories written before the change stay snappy with v1 pages, a
+scan reads both, and no file is rewritten to convert it. Measured on
+the hourly ETL benchmark (seed 11, 5.35 MB of input), the warehouse
+after the timed batch took 7.75 MB against 12.97 MB in Spark's default
+snappy/v1 (staged events 6.06 -> 3.26 MB, ``visits`` 3.89 -> 2.76 MB);
+zstd alone gave 9.07 MB and v2 pages alone 8.95 MB. The batch's wall
+and CPU time did not move (ten interleaved pairs, 4-core host).
+
 Legacy tables kept their entries in ``_manifest.json`` only;
 ``history()`` unions that file with the commit log (log entries
 winning), and ``vacuum`` rewrites it to the kept entries so a dropped
@@ -108,6 +123,9 @@ _DAY_DIR = "__day"
 #: the directory Spark writes NULL partition values to
 _NULL_DAY = "__HIVE_DEFAULT_PARTITION__"
 _DAY_US = 86_400_000_000
+#: writer options of every commit's parquet (module docstring, "Storage
+#: format"); a DataFrameWriter option reaches the write job's Hadoop conf
+_PARQUET_OPTIONS = {"compression": "zstd", "parquet.writer.version": "v2"}
 
 
 class CommitConflictError(Exception):
@@ -198,7 +216,12 @@ def _write_observed(df: DataFrame, out: str) -> tuple[int, str]:
     an empty or 0-partition frame); file sources read every field as
     nullable, so the recorded schema is ``asNullable``."""
     obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(out)
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.options(**_PARQUET_OPTIONS)
+        .mode("overwrite")
+        .parquet(out)
+    )
     return int(obs.get["n"]), df._jdf.schema().asNullable().json()
 
 
@@ -240,7 +263,8 @@ def _write_days(
         df.withColumn(_DAY_DIR, _day_of(day_col))
         .repartition(_DAY_DIR)
         .observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.partitionBy(_DAY_DIR)
+        .write.options(**_PARQUET_OPTIONS)
+        .partitionBy(_DAY_DIR)
         .mode("overwrite")
         .parquet(out)
     )

@@ -11,7 +11,10 @@ import threading
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from dimagi_data_platform_spark.sources import versioned as V
 
@@ -321,3 +324,116 @@ def test_layout_is_fixed_at_creation_and_empty_writes_return(spark, tmp_path):
     e = V.history(p)[-1]
     assert sorted(e["parts"]) == ["2024-01-02", "2024-01-10"] and e["n_rows"] == 2
     assert [r[0] for r in _rows(V.read_version(spark, p))] == [3, 4]
+
+
+def _chunks(d):
+    """(column, codec, encodings) of every column chunk in the parquet
+    files under ``d``."""
+    out = []
+    for root, _, files in os.walk(d):
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(root, f)).metadata
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for i in range(rg.num_columns):
+                    c = rg.column(i)
+                    out.append((c.path_in_schema, c.compression, set(c.encodings)))
+    return out
+
+
+def _codecs(d):
+    chunks = _chunks(d)
+    assert chunks, f"no column chunks under {d}"
+    return {codec for _, codec, _ in chunks}
+
+
+def _written_dirs(p, e):
+    """Directories a commit wrote itself (a day entry's own days)."""
+    if "parts" in e:
+        return [os.path.join(p, d) for d in e["parts"].values() if d.startswith(e["dir"] + "/")]
+    return [os.path.join(p, V._data_dir(p, e))]
+
+
+def test_every_commit_path_writes_zstd_v2_pages(spark, tmp_path):
+    """write_version, merge_version (plain and day-partitioned), both
+    halves of a DV merge and compact_version write ZSTD column chunks;
+    the strictly increasing id column is stored DELTA_BINARY_PACKED, the
+    encoding v1 pages lack."""
+    base, ts = _base(spark, n=200, days=4)
+    p, u = _twins(spark, tmp_path, base.orderBy("id").coalesce(1))
+    upd = _frame(spark, [1, 2, 900], [T0 + 3 * DAY_US + 1] * 3, ["x", "y", "z"])
+    dirs = {
+        "write": _written_dirs(u, V.history(u)[-1]),
+        "write_days": _written_dirs(p, V.history(p)[-1]),
+    }
+    _merge_both(spark, p, u, upd, "2024-01-02")
+    dirs["merge"] = _written_dirs(u, V.history(u)[-1])
+    dirs["merge_days"] = _written_dirs(p, V.history(p)[-1])
+    V.merge_version_dv(spark, u, _frame(spark, [3], [T0 + 4 * DAY_US], ["w"]), ["id"], "ts", "2024-01-03")
+    dv = os.path.join(u, V._data_dir(u, V.history(u)[-1]))
+    dirs["dv_delta"], dirs["dv_keys"] = [os.path.join(dv, "delta")], [os.path.join(dv, "dv")]
+    V.compact_version(spark, u, "2024-01-04")
+    dirs["compact"] = _written_dirs(u, V.history(u)[-1])
+    for name, ds in dirs.items():
+        assert ds, name
+        for d in ds:
+            assert _codecs(d) == {"ZSTD"}, (name, d)
+    ids = [enc for col, _, enc in _chunks(dirs["write"][0]) if col == "id"]
+    assert ids and all("DELTA_BINARY_PACKED" in enc for enc in ids), ids
+
+
+def test_old_snappy_days_merge_with_new_writer(spark, tmp_path, monkeypatch):
+    """A table written before the format change (default snappy, v1
+    pages) merges with the new writer: the result reads as the same
+    merge on a table written wholly by the new writer, the untouched
+    days keep their snappy files, and vacuum leaves it readable."""
+    base, ts = _base(spark, n=80, days=5)
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    monkeypatch.setattr(V, "_PARQUET_OPTIONS", {})
+    V.write_version(base, old, "2024-01-01", day_partition="ts")
+    monkeypatch.undo()
+    V.write_version(base, new, "2024-01-01", day_partition="ts")
+    e1 = V.history(old)[-1]
+    assert all(_codecs(os.path.join(old, d)) == {"SNAPPY"} for d in e1["parts"].values())
+    upd = _frame(spark, [0, 5_000], [T0 + 4 * DAY_US + 3, T0 + 4 * DAY_US + 4], ["a", "b"])
+    for t in (old, new):
+        V.merge_version(spark, t, upd, ["id"], "ts", "2024-01-02")
+    want = _rows(V.read_version(spark, new))
+    assert _rows(V.read_version(spark, old)) == want
+    e2 = V.history(old)[-1]
+    untouched = [d for d in e2["parts"].values() if not d.startswith(e2["dir"] + "/")]
+    assert untouched
+    for d in untouched:
+        assert _codecs(os.path.join(old, d)) == {"SNAPPY"}, d
+    for d in _written_dirs(old, e2):
+        assert _codecs(d) == {"ZSTD"}, d
+    V.vacuum(old, keep_last=1, stage_retention_sec=0)
+    assert _rows(V.read_version(spark, old)) == want
+
+
+def _arrow_rows(dirs):
+    """A committed version's rows as an external reader sees them."""
+    t = pa.concat_tables([pq.read_table(d) for d in dirs])
+    ids = t.column("id").to_pylist()
+    ts = t.column("ts").cast(pa.int64()).to_pylist()
+    return sorted(zip(ids, ts, t.column("v").to_pylist()), key=repr)
+
+
+def test_pyarrow_reads_committed_version(spark, tmp_path):
+    """pyarrow over one committed version's data directories returns
+    read_version's rows, for a plain and a day-partitioned table."""
+    base, ts = _base(spark, n=60, days=3)
+    p, u = _twins(spark, tmp_path, base)
+    upd = _frame(spark, [1, 700], [T0 + 2 * DAY_US + 9, T0 + 1], ["x", "y"])
+    _merge_both(spark, p, u, upd, "2024-01-02")
+    for t in (p, u):
+        e = V.history(t)[-1]
+        dirs = ([os.path.join(t, d) for d in e["parts"].values()] if "parts" in e
+                else [os.path.join(t, V._data_dir(t, e))])
+        want = sorted(
+            map(tuple, V.read_version(spark, t).select("id", F.unix_micros("ts"), "v").collect()),
+            key=repr,
+        )
+        assert _arrow_rows(dirs) == want, t

@@ -25,7 +25,9 @@ bench default):
      retention_cohorts) over the full events table, value-for-value;
   5. emit ONE JSON artifact: per-run walls, the incremental-vs-rebuild
      ratio for the new batch (median, and every pass's), the batch's
-     bytes written, the touched fraction, and the parity verdicts.
+     bytes written, warehouse A's bytes per table after both runs and
+     their total over the source's bytes, the touched fraction, and the
+     parity verdicts.
 
 The interesting number is t_batch2 / t_full at the recorded touched
 fraction: per-batch work is proportional to TOUCHED grains' history
@@ -148,6 +150,13 @@ def main() -> None:
         out["r2"] = run_platform_etl(spark, cfg_a)
         out["t_batch2"] = round(time.perf_counter() - t0, 2)
         out["batch2_bytes"] = _du(wh_a) - bytes_before
+        out["source_bytes"] = _du(src_incr)
+        out["wh_bytes"] = _du(wh_a)
+        out["table_bytes"] = {
+            name: _du(os.path.join(wh_a, name))
+            for name in sorted(os.listdir(wh_a))
+            if os.path.isdir(os.path.join(wh_a, name))
+        }
         t0 = time.perf_counter()
         run_platform_etl(
             spark,
@@ -213,6 +222,12 @@ def main() -> None:
         "t_batch1_sec": median("t_batch1"),
         "t_batch2_sec": median("t_batch2"),
         "batch2_bytes_written": int(runs["batch2_bytes"]),
+        "source_bytes": int(runs["source_bytes"]),
+        "warehouse_bytes": int(runs["wh_bytes"]),
+        "warehouse_bytes_by_table": runs["table_bytes"],
+        "warehouse_bytes_vs_source": round(
+            runs["wh_bytes"] / runs["source_bytes"], 3
+        ),
         "t_full_rebuild_sec": median("t_full"),
         "incr_vs_rebuild": (
             statistics.median(ratios) if None not in ratios else None
