@@ -85,9 +85,10 @@ def frozen_range_pid(
             df = df.localCheckpoint()
         n_target = sample_n or max(npart * 20, 200)
         proj = df.select(*order_cols)
-        # a checkpoint's projection has no shuffle, so it counts in one
-        # job; an unmaterialized input may, and keeps ``count()``
-        cnt = row_count(proj) if materialize else proj.count()
+        # counts the physical plan's rows: one job where ``count()``
+        # runs two under AQE, on either path (both callers' inputs are
+        # checkpoints; a shuffled input would only add its stages)
+        cnt = row_count(proj)
         if cnt == 0:
             sample = []
         elif cnt <= 4 * n_target:

@@ -98,10 +98,11 @@ def guarded_broadcast(
 
 
 def row_count(df: DataFrame) -> int:
-    """``df.count()`` in ONE job for a frame with no shuffle in its
-    plan (a checkpoint and its filters): counts the physical plan's
+    """``df.count()`` without its aggregate: counts the physical plan's
     rows directly, where ``count()`` plans an aggregate that adaptive
-    execution runs as a map job plus a result job."""
+    execution runs as a map job plus a result job. The count is exact
+    for any plan; a plan with no shuffle (a checkpoint and its
+    filters) runs in one job, and a shuffled one adds its stages."""
     return df._jdf.queryExecution().toRdd().count()
 
 
