@@ -1,7 +1,8 @@
-"""The loop contract shared by the nine iterative kernels: connected
+"""The loop contract shared by the eight iterative kernels: connected
 components (propagate and star, components.py), PageRank / PPR, BFS
-and k-core (graph.py), BPE training (bpe.py), and the label-propagation
-and HITS queries in plans/queries.py.
+and k-core (graph.py), and the label-propagation and HITS queries in
+plans/queries.py. (BPE training, bpe.py, runs its merges in one task
+and keeps no loop state.)
 
 Every driver loop makes the same three decisions; each sits behind one
 helper here, so the kernels hold only their recurrence:

@@ -302,8 +302,13 @@ def _merge_or_init(
     day_partition: str | None = None,
 ) -> int:
     """Merge into the table, or create it (day-partitioned on
-    ``day_partition`` if given) from the first batch."""
+    ``day_partition`` if given) from the first batch. An unpartitioned
+    table's first version is written sorted by key within each file,
+    as every later merge's key window writes it: clustered keys
+    compress (``user_first_day`` 44 → 14 KB at the benchmark's seed 11)."""
     if not history(path):
+        if day_partition is None:
+            updates = updates.sortWithinPartitions(*keys)
         return write_version(updates, path, commit_ts, day_partition=day_partition)
     return merge_version(spark, path, updates, keys, order_col, commit_ts)
 

@@ -2745,11 +2745,13 @@ FROM p ORDER BY priority, doc_id LIMIT 200
 
 def _bpe_train_sql(n_merges: int) -> str:
     """Unrolled BPE training — the SQL twin of operators/bpe.bpe_train:
-    each round is the identical (pair-count → argmax → literal replace)
+    each round is the full (pair-count → argmax → literal replace)
     recurrence on the double-space segment representation, so the merge
     table of an ITERATIVE tokenizer training hash-matches bit for bit.
-    The argmax CTE per round plays the role of the broadcast 1-row
-    LIMIT in the Spark plan; ties break on the pair itself."""
+    It recounts every pair each round where the Spark trainer updates
+    its counts incrementally in one task, an independent path to the
+    same table; the argmax CTE breaks ties on the pair itself, in the
+    same (count desc, a, b) order."""
     ctes = [
         r"""words AS (
   SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w

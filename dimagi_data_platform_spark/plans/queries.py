@@ -4975,13 +4975,14 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-matched ITERATIVE training: counts are exact integers, ties
     break on the pair itself, and the DuckDB oracle unrolls the
     identical recurrence as chained CTEs (argmax-in-SQL per round) —
-    same contract as PageRank (R57). No driver collect: the argmax is
-    a 1-row LIMIT broadcast cross-joined onto the vocabulary
-    (operators/bpe.py, checkpointed per round).
+    same contract as PageRank (R57). No driver collect: every merge
+    runs in one Arrow task over the word-count table, which re-counts
+    only the words holding each round's argmax pair (operators/bpe.py);
+    the frame stays lazy until the caller's action.
 
-    Scale: the corpus-keyed shuffle happens ONCE (word counts);
-    every merge round is vocabulary-sized string work + an
-    |symbols|²-key aggregate.
+    Scale: the corpus-keyed shuffle happens ONCE (word counts); the
+    merges are vocabulary-sized work in one Python worker (1M words,
+    6 merges: about 9 s on a 4-core host).
     """
     from dimagi_data_platform_spark.operators.bpe import bpe_train
 
@@ -5003,10 +5004,12 @@ def bpe_vocab_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-weighted frequency. What a tokenizer-build pipeline ships
     alongside the merge table; the oracle replays the identical
     unrolled recurrence and tokenizes from its final segment state.
+    The re-segmented vocabulary comes out of the same one-task trainer
+    as L49's merge table.
 
     Scale: same contract as L49 — corpus shuffle once (word counts),
-    then vocabulary-sized rounds; the symbol rollup is an
-    |symbol-vocab|-key aggregate.
+    then the merges in one task over the vocabulary; the symbol
+    rollup is an |symbol-vocab|-key aggregate.
     """
     from dimagi_data_platform_spark.operators.bpe import SEP, bpe_train_apply
 
@@ -5140,6 +5143,7 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup.
     """
     from dimagi_data_platform_spark.operators.linkage import global_row_number
+    from dimagi_data_platform_spark.operators.loop import row_count
 
     orders = _t(spark, sf_dir, "orders")
     horizon = orders.agg(F.max(F.to_date("o_orderdate")).alias("h"))
@@ -5166,7 +5170,7 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     n_target = max(par * 20, 200)
     wide = per.select("o_custkey", "recency_days", "n_orders", "cents")
-    cnt = wide.count()
+    cnt = row_count(wide)
     if cnt <= 4 * n_target:
         srows = wide.collect()
     else:
@@ -13383,11 +13387,14 @@ def _snm_boundary_sample(df: DataFrame, order_cols: list[str]) -> list[tuple]:
     tuples locally — e.g. reversing a string column — instead of paying
     frozen_range_pid's count+collect per rank). Same sampling contract
     as frozen_range_pid: boundary quality affects only balance, never
-    rank correctness."""
+    rank correctness. Callers pass a checkpoint, so the count is one
+    job (``loop.row_count``)."""
+    from dimagi_data_platform_spark.operators.loop import row_count
+
     par = df.sparkSession.sparkContext.defaultParallelism
     n_target = max(par * 20, 200)
     proj = df.select(*order_cols)
-    cnt = proj.count()
+    cnt = row_count(proj)
     if cnt == 0:
         return []
     if cnt <= 4 * n_target:

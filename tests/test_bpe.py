@@ -1,11 +1,33 @@
-"""BPE training: the Spark iterative loop must reproduce a direct
-Python reference implementation (independent code path — dict-based
-pair counting + list-based merge) on a vocabulary with ties,
-overlapping pairs, and back-to-back merge sites."""
+"""BPE training: the one-task trainer must reproduce a direct Python
+reference implementation (independent code path — full pair recount
+per merge + list-based merge) on vocabularies with ties, overlapping
+pairs, back-to-back merge sites and multi-byte UTF-8 symbols."""
 
 from __future__ import annotations
 
-from dimagi_data_platform_spark.operators.bpe import bpe_segment, bpe_train
+import pandas as pd
+
+from dimagi_data_platform_spark.operators.bpe import (
+    SEP,
+    bpe_segment,
+    bpe_train,
+    bpe_train_apply,
+)
+
+
+def _wordfreq(spark, vocab: dict[str, int]):
+    """A (w, freq) frame built from pandas, so its scans stay JVM-side."""
+    return spark.createDataFrame(
+        pd.DataFrame({"w": list(vocab), "freq": list(vocab.values())}),
+        "w string, freq long",
+    )
+
+
+def _merge_rows(df) -> list[tuple]:
+    return [
+        (r["a"], r["b"], r["merged"], r["pair_count"])
+        for r in df.orderBy("step").collect()
+    ]
 
 
 def _ref_bpe(vocab: dict[str, int], n_merges: int):
@@ -52,21 +74,13 @@ VOCAB = {
 
 
 def test_bpe_train_matches_reference(spark):
-    wf = spark.createDataFrame(
-        [(w, f) for w, f in VOCAB.items()], ["w", "freq"]
-    )
-    got = [
-        (r["a"], r["b"], r["merged"], r["pair_count"])
-        for r in bpe_train(wf, 6).orderBy("step").collect()
-    ]
+    got = _merge_rows(bpe_train(_wordfreq(spark, VOCAB), 6))
     want, _ = _ref_bpe(VOCAB, 6)
     assert got == want
 
 
 def test_bpe_segment_applies_learned_merges(spark):
-    wf = spark.createDataFrame(
-        [(w, f) for w, f in VOCAB.items()], ["w", "freq"]
-    )
+    wf = _wordfreq(spark, VOCAB)
     merges, ref_segs = _ref_bpe(VOCAB, 6)
     out = bpe_segment(wf, [(a, b) for a, b, _, _ in merges])
     got = {}
@@ -78,7 +92,7 @@ def test_bpe_segment_applies_learned_merges(spark):
 def test_bpe_overlap_semantics(spark):
     # "aaaa" with pair (a,a): count 3 occurrences, merge produces
     # (aa, aa) — left-to-right non-overlap, never (a, aa, a)
-    wf = spark.createDataFrame([("aaaa", 1)], ["w", "freq"])
+    wf = _wordfreq(spark, {"aaaa": 1})
     rows = bpe_train(wf, 2).orderBy("step").collect()
     assert (rows[0]["a"], rows[0]["b"], rows[0]["pair_count"]) == ("a", "a", 3)
     assert (rows[1]["a"], rows[1]["b"]) == ("aa", "aa")
@@ -100,12 +114,75 @@ def test_bpe_random_vocabs_match_reference(spark):
             vocab[w] = vocab.get(w, 0) + rng.randint(1, 9)
         n_merges = rng.randint(1, 5)
         want, _ = _ref_bpe(vocab, n_merges)
-        wf = spark.createDataFrame(list(vocab.items()), ["w", "freq"])
-        got = [
-            (r["a"], r["b"], r["merged"], r["pair_count"])
-            for r in bpe_train(wf, n_merges).orderBy("step").collect()
-        ]
+        got = _merge_rows(bpe_train(_wordfreq(spark, vocab), n_merges))
         assert got == want, f"trial {trial}: vocab={vocab} n={n_merges}"
+
+
+# one- to four-byte UTF-8 symbols. Code-point order (Python's, and the
+# UTF-8 byte order Spark and DuckDB compare in) and UTF-16 order differ
+# on the last two: U+FF41 sorts before U+1F642 only by code point
+_ALPHABET = ["a", "b", "é", "ß", "ａ", "🙂"]
+
+
+def _random_vocab(rng) -> dict[str, int]:
+    """Words over a few symbols with counts 1-3, so pair counts tie
+    often, plus forced overlapping (``aaa``) and back-to-back
+    (``abab``) merge sites in the same symbols."""
+    syms = rng.sample(_ALPHABET, rng.randint(2, 4))
+    x, y = syms[0], syms[1]
+    vocab = {x * 3: rng.randint(1, 3), (x + y) * 2: rng.randint(1, 3)}
+    for _ in range(rng.randint(3, 12)):
+        w = "".join(rng.choice(syms) for _ in range(rng.randint(1, 8)))
+        vocab[w] = vocab.get(w, 0) + rng.randint(1, 3)
+    return vocab
+
+
+def _segments(df) -> dict[tuple, int]:
+    out: dict[tuple, int] = {}
+    for r in df.collect():
+        syms = tuple(r["seg"].strip(" ").split(SEP))
+        out[syms] = out.get(syms, 0) + r["freq"]
+    return out
+
+
+def test_bpe_one_task_trainer_matches_reference_property(spark):
+    """Seeded random vocabularies: the merge table of ``bpe_train`` and
+    the final segments of ``bpe_train_apply`` equal the reference's,
+    through count ties, overlapping and back-to-back sites and
+    multi-byte symbols in tie positions. Asking for more merges than
+    the vocabulary has pairs stops early, as the reference does."""
+    import random
+
+    rng = random.Random(20261020)
+    for trial in range(8):
+        vocab = _random_vocab(rng)
+        # the last trials ask for more merges than there are pairs
+        n_merges = rng.randint(2, 8) if trial < 6 else 60
+        want, want_segs = _ref_bpe(vocab, n_merges)
+        wf = _wordfreq(spark, vocab)
+        got = _merge_rows(bpe_train(wf, n_merges))
+        ctx = f"trial {trial}: vocab={vocab} n={n_merges}"
+        assert got == want, ctx
+        assert _segments(bpe_train_apply(wf, n_merges)) == want_segs, ctx
+        if trial >= 6:
+            assert len(want) < n_merges, ctx
+    # a tie between a three-byte and a four-byte pair resolves by code
+    # point (U+FF41 first), not by UTF-16 units (a surrogate first)
+    got = _merge_rows(bpe_train(_wordfreq(spark, {"ａａ": 2, "🙂🙂": 2}), 1))
+    assert got == [("ａ", "ａ", "ａａ", 2)]
+
+
+def test_bpe_empty_vocab_and_null_words(spark):
+    """An empty vocabulary (the training task reads an empty partition)
+    trains no merges and segments nothing; a NULL word has no pairs and
+    comes back as a NULL segment with its frequency."""
+    empty = spark.range(4).filter("id < 0").selectExpr("'ab' AS w", "id AS freq")
+    assert bpe_train(empty, 3).collect() == []
+    assert bpe_train_apply(empty, 3).collect() == []
+    wf = _wordfreq(spark, {"abab": 2, None: 5})
+    assert _merge_rows(bpe_train(wf, 3)) == _ref_bpe({"abab": 2}, 3)[0]
+    segs = {r["seg"]: r["freq"] for r in bpe_train_apply(wf, 1).collect()}
+    assert segs == {"  ab  ab  ": 2, None: 5}
 
 
 def test_byte_bpe_encode_matches_reference_token_for_token(spark):
@@ -132,7 +209,7 @@ def test_byte_bpe_encode_matches_reference_token_for_token(spark):
         "tabs\tand\nnewlines\r\nmixed",
     ]
     # 1) Spark pretokenizer == python reference (regex semantics pin)
-    df = spark.createDataFrame([(s,) for s in corpus], "t string")
+    df = spark.createDataFrame(pd.DataFrame({"t": corpus}), "t string")
     got = {
         r.t: list(r.toks)
         for r in df.select(
@@ -145,7 +222,7 @@ def test_byte_bpe_encode_matches_reference_token_for_token(spark):
 
     # 2) word-level encode == min-rank reference, token for token
     words = sorted({w for s in corpus for w in pretokenize_py(s)})
-    wdf = spark.createDataFrame([(w,) for w in words], "w string")
+    wdf = spark.createDataFrame(pd.DataFrame({"w": words}), "w string")
     enc = {r.w: list(r.symbols) for r in byte_bpe_encode_words(wdf).collect()}
     for w in words:
         assert enc[w] == encode_word_py(w), (w, enc[w], encode_word_py(w))

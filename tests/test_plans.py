@@ -180,40 +180,39 @@ def test_item_item_cosine_no_cartesian(spark):
     assert "hashpartitioning" in plan or "BroadcastHashJoin" in plan
 
 
-def test_bpe_rounds_stay_jvm_side(spark):
-    """One BPE round — pair counting, argmax limit, broadcast merge —
-    is codegen string/array work with no Python stages. (The query's
-    own final plan is just checkpoint scans, so assert on a round's
-    un-checkpointed plan directly.)"""
-    import contextlib
-    import io
+def test_bpe_trains_in_one_lazy_task(spark):
+    """BPE training is one Arrow task over the word-count table:
+    building the query fires no job beyond the parquet schema read of
+    its input table, building plus running it (a noop write) fires at
+    most 4 (the word-count shuffle and the training task), and the
+    plan holds exactly one MapInPandas, over one partition."""
+    import re
 
-    from dimagi_data_platform_spark.operators.bpe import (
-        adjacent_pairs,
-        apply_merge,
-        segment_words,
-    )
-    from pyspark.sql import functions as F
+    from dimagi_data_platform_spark.catalog import load_table
 
-    wf = spark.createDataFrame([("lower", 5), ("low", 3)], ["w", "freq"])
-    cur = segment_words(wf)
-    pc = (
-        adjacent_pairs(cur)
-        .groupBy("a", "b")
-        .agg(F.sum("freq").cast("long").alias("pair_count"))
+    sc = spark.sparkContext
+
+    def jobs(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, n_read = jobs("bpe-read", lambda: load_table(spark, SF_SMALL, "documents"))
+    df, n_build = jobs(
+        "bpe-build", lambda: QUERIES["bpe_train_merges"](spark, SF_SMALL)
     )
-    best = pc.orderBy(F.desc("pair_count"), "a", "b").limit(1)
-    round_plan = apply_merge(cur, best)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        round_plan.explain("formatted")
-    plan = buf.getvalue()
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
-    # the argmax cross-join rides a broadcast (AQE's pre-execution
-    # formatted plan does not print codegen spans, so Python-freeness
-    # is the codegen assertion here)
-    assert "BroadcastNestedLoopJoin" in plan
+    assert n_build == n_read
+    _, n_run = jobs(
+        "bpe-run", lambda: df.write.format("noop").mode("overwrite").save()
+    )
+    assert 1 <= n_build + n_run <= 4
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"MapInPandas", plan)) == 1, plan
+    assert re.search(r"MapInPandas.*\n\s*\+- Coalesce 1\n", plan), plan
 
 
 def test_chi2_pushes_column_pruning(spark):

@@ -50,7 +50,7 @@ SHOW = [
     ("bigram_lm_perplexity",
      "bigram-keyed shuffle join to the LM (model never broadcast)"),
     ("bpe_train_merges",
-     "vocab-sized merge rounds, argmax as broadcast 1-row limit"),
+     "one word-count shuffle, every merge in one MapInPandas task"),
     ("hybrid_search_rrf",
      "bounded BM25 + kNN legs, 20-row fusion join"),
     ("item_item_cosine",
